@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .plans import AnalytePlan, Engine, OpSpec, ScanSpec, StudyPlan
+from .sources.files import read_events, read_parquet
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLES: dict[str, str] = {}
@@ -115,7 +116,7 @@ def q_s1(spark: SparkSession, sf_dir: str) -> DataFrame:
     keyed read explodes back to tabular — the round-trip the reference does
     through DynamoDB items (Configurable_ETL_Python.py:30-41,
     Data_Ingestion_Python.py:101-109)."""
-    li = spark.read.parquet(_pq(sf_dir, "lineitem"))
+    li = read_parquet(spark, _pq(sf_dir, "lineitem"))
     nested = (
         li.groupBy("l_returnflag", "l_linestatus")
         .agg(F.collect_list(F.struct("l_orderkey", "l_linenumber", "l_quantity"))
@@ -269,7 +270,7 @@ def q_c1_c2(spark: SparkSession, sf_dir: str) -> DataFrame:
     type=number cast — string-typed inputs exactly like the reference's
     all-string working model."""
     eng = Engine(spark)
-    li = spark.read.parquet(_pq(sf_dir, "lineitem")).select(
+    li = read_parquet(spark, _pq(sf_dir, "lineitem")).select(
         "l_orderkey", "l_linenumber",
         F.date_format("l_shipdate", "dd-MM-yyyy HH:mm").alias("ship_raw"),
         F.col("l_quantity").cast("string").alias("qty_raw"),
@@ -501,8 +502,10 @@ def q_c11_c12(spark: SparkSession, sf_dir: str) -> DataFrame:
     (emitted as JSON so the oracle comparison is a plain string)."""
     from .sinks.boundary import to_standardized_form
 
-    c = spark.read.parquet(_pq(sf_dir, "customer"))
-    n = spark.read.parquet(_pq(sf_dir, "nation")).where(F.col("n_regionkey") <= 2)
+    c = read_parquet(spark, _pq(sf_dir, "customer"))
+    n = read_parquet(spark, _pq(sf_dir, "nation")).where(
+        F.col("n_regionkey") <= 2
+    )
     src = (
         c.join(F.broadcast(n), c.c_nationkey == n.n_nationkey, "left")
         .select(
@@ -736,7 +739,7 @@ def q_a5(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A5: group-collect (the ingestion nest) with in-list ordering by key
     columns (W4), then positional access — done with collect_list +
     sort_array, not an O(n²) loop."""
-    li = spark.read.parquet(_pq(sf_dir, "lineitem"))
+    li = read_parquet(spark, _pq(sf_dir, "lineitem"))
     nested = li.groupBy("l_orderkey").agg(
         F.sort_array(
             F.collect_list(F.struct("l_linenumber", "l_quantity"))
@@ -940,7 +943,7 @@ def q_x2(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_x3(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hierarchical rollup (subtotals + grand total) — the OLAP-serving
     aggregate the reference's export layer leaves to Athena."""
-    li = spark.read.parquet(_pq(sf_dir, "lineitem"))
+    li = read_parquet(spark, _pq(sf_dir, "lineitem"))
     return (
         li.rollup("l_returnflag", "l_linestatus").agg(
             F.sum(F.col("l_quantity").cast("decimal(18,2)")).cast("double")
@@ -959,8 +962,8 @@ def q_x3(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_sql_op(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SQL op: registry bindings are temp views, so a program row can be a
-    plain SQL statement over everything bound so far."""
+    """SQL op: the op mirrors the registry bindings as temp views, so a
+    program row can be a plain SQL statement over everything bound so far."""
     eng = Engine(spark)
     eng.run_scan(ScanSpec("nation", "parquet", _pq(sf_dir, "nation")))
     eng.run_op(OpSpec("SQL", "agg", ["nation"], {"query": """
@@ -1016,7 +1019,7 @@ def q_u2(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_f1(spark: SparkSession, sf_dir: str) -> DataFrame:
     """§2.8 scalar-function surface: regexp extract, concat_ws, case,
     substring, reverse, length — all JVM-side Column functions."""
-    d = spark.read.parquet(_pq(sf_dir, "documents"))
+    d = read_parquet(spark, _pq(sf_dir, "documents"))
     return d.select(
         "doc_id",
         F.regexp_extract("source", r"src([0-9]+)", 1).alias("src_num"),
@@ -1052,7 +1055,7 @@ def q_f2(spark: SparkSession, sf_dir: str) -> DataFrame:
     datetime.date while DuckDB DATE fetches as datetime64 — numerically
     equal, type-different, exactly the drift the driver's type-sensitive
     value-hash rejects (the r6 dtype-strict comparator caught this)."""
-    o = spark.read.parquet(_pq(sf_dir, "orders"))
+    o = read_parquet(spark, _pq(sf_dir, "orders"))
     return o.select(
         "o_orderkey",
         F.year("o_orderdate").alias("y"),
@@ -1080,7 +1083,7 @@ def q_x5(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact interpolated percentiles. Both engines interpolate linearly
     but may associate (1-g)*a+g*b differently — rounded to 4dp so a last-ulp
     difference can't flip an exact value-hash."""
-    li = spark.read.parquet(_pq(sf_dir, "lineitem"))
+    li = read_parquet(spark, _pq(sf_dir, "lineitem"))
     return li.groupBy("l_returnflag").agg(
         F.round(F.percentile("l_extendedprice", F.lit(0.25)), 4).alias("p25"),
         F.round(F.median("l_extendedprice"), 4).alias("p50"),
@@ -1098,7 +1101,7 @@ def q_x5(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_x4(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Global top-k: orderBy+limit compiles to TakeOrderedAndProject (a
     per-partition heap + single merge — no global sort shuffle)."""
-    o = spark.read.parquet(_pq(sf_dir, "orders"))
+    o = read_parquet(spark, _pq(sf_dir, "orders"))
     return (
         o.select("o_orderkey", "o_totalprice")
         .orderBy(F.col("o_totalprice").desc(), F.col("o_orderkey"))
@@ -1124,7 +1127,6 @@ def q_x6(spark: SparkSession, sf_dir: str) -> DataFrame:
     key-partitioned window over the tagged union — no join node; DuckDB's
     native ASOF JOIN is the oracle."""
     from .operators.temporal import asof_join
-    from .sources.files import read_events
 
     ev = read_events(spark, _pq(sf_dir, "events"))
     left = ev.where(F.col("event_type") == "purchase").select(
@@ -1159,7 +1161,6 @@ def q_x7(spark: SparkSession, sf_dir: str) -> DataFrame:
     bins, the join is a plain equi-join on (user_id, bin) + exact range
     filter — never a BroadcastNestedLoopJoin."""
     from .operators.temporal import range_join
-    from .sources.files import read_events
 
     ev = read_events(spark, _pq(sf_dir, "events"))
     intervals = ev.where(F.col("event_type") == "purchase").select(

@@ -13,6 +13,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .catalog import register, _pq
+from .sources.files import read_events, read_parquet
 from .llm import dedup as D
 from .llm import similarity as S
 from .llm import text as T
@@ -26,10 +27,10 @@ def _stage_cache(df: DataFrame) -> DataFrame:
     pays queryExecution.toRdd (full physical planning) eagerly at CALL
     time even with eager=False — measured 0.8-1.0s of pure driver work
     per boundary per invocation at sf0.1, the single largest fixed cost
-    of x19 (OPTIMIZATION_r15.md §boundaries; r14's §10 measured the
-    three strategies as equal under that round's box noise, this round's
-    steady-state split of construct vs action isolated it). Cache
-    eviction is recompute-safe and capacity-bounded (_scope_cache)."""
+    of x19 (end-to-end timings had measured the three strategies as
+    equal within host noise; a steady-state split of construction from
+    action isolated it). Cache eviction is recompute-safe and
+    capacity-bounded (_scope_cache)."""
     return D._scope_cache(df)
 
 
@@ -49,8 +50,6 @@ def _stage_cache(df: DataFrame) -> DataFrame:
     """,
 )
 def q_e1(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .sources.files import read_events
-
     ev = read_events(spark, _pq(sf_dir, "events"))
     return (
         ev.groupBy(
@@ -86,8 +85,6 @@ def q_e2(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sessionization with a 30-minute inactivity gap — the batch shape of
     a session window (streaming variant: F.session_window / flatMapGroups
     WithState in streaming/)."""
-    from .sources.files import read_events
-
     ev = read_events(spark, _pq(sf_dir, "events"))
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     flagged = ev.withColumn(
@@ -132,8 +129,6 @@ def q_e3(spark: SparkSession, sf_dir: str) -> DataFrame:
     overlapping windows — the batch shape of the streaming
     `groupBy(window(ts, '1 hour', '15 minutes'))` rollup (same windows the
     watermarked readStream variant emits)."""
-    from .sources.files import read_events
-
     ev = read_events(spark, _pq(sf_dir, "events"))
     w = F.window("ts", "1 hour", "15 minutes")
     return (
@@ -220,7 +215,7 @@ _JACCARD_P, _JACCARD_Q = 1, 5  # threshold 0.2
     """,
 )
 def q_d1(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = spark.read.parquet(_pq(sf_dir, "documents"))
+    docs = read_parquet(spark, _pq(sf_dir, "documents"))
     return D.dedup_exact(docs)
 
 
@@ -232,7 +227,7 @@ def q_d1(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_d2(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact near-dup pairs by 3-gram Jaccard >= 0.2, via the inverted-index
     similarity join (no O(N²) cross product)."""
-    docs = spark.read.parquet(_pq(sf_dir, "documents"))
+    docs = read_parquet(spark, _pq(sf_dir, "documents"))
     return D.ngram_jaccard_pairs(docs, n=_JACCARD_N,
                                  threshold=_JACCARD_P / _JACCARD_Q)
 
@@ -284,7 +279,7 @@ def _minhash_lsh_oracle() -> str:
 def q_d3(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash(16) banded 8×2, candidates verified at Jaccard >= 0.1. The
     md5-derived hash family makes the whole pipeline reproducible in SQL."""
-    docs = spark.read.parquet(_pq(sf_dir, "documents"))
+    docs = read_parquet(spark, _pq(sf_dir, "documents"))
     return D.minhash_lsh_pairs(docs, n=_JACCARD_N, bands=_LSH_BANDS,
                                rows_per_band=_LSH_ROWS,
                                threshold=_LSH_P / _LSH_Q)
@@ -316,7 +311,7 @@ def q_d19(spark: SparkSession, sf_dir: str) -> DataFrame:
     (hot band keys SPLIT per group, shrinking the worst buckets — a
     skew win at 100 TB), not post-filtered from a wider candidate set.
     Oracle: d3's own CTE chain ∩ null-safe group equality."""
-    docs = spark.read.parquet(_pq(sf_dir, "documents"))
+    docs = read_parquet(spark, _pq(sf_dir, "documents"))
     return D.minhash_lsh_pairs(
         docs, n=_JACCARD_N, bands=_LSH_BANDS, rows_per_band=_LSH_ROWS,
         threshold=_LSH_P / _LSH_Q, group_cols=["lang"],
@@ -349,7 +344,7 @@ def _simhash_oracle() -> str:
 
 @register("d4_simhash32", _simhash_oracle())
 def q_d4(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = spark.read.parquet(_pq(sf_dir, "documents"))
+    docs = read_parquet(spark, _pq(sf_dir, "documents"))
     return D.simhash32(docs)
 
 
@@ -453,7 +448,7 @@ def q_d13(spark: SparkSession, sf_dir: str) -> DataFrame:
     WWW'07 pigeonhole band join (k+1 bands, agree on >= 1), verified
     with exact bit_count(xor) — never an all-pairs comparison; the
     family's pair-join counterpart to d4's fingerprints."""
-    docs = spark.read.parquet(_pq(sf_dir, "documents"))
+    docs = read_parquet(spark, _pq(sf_dir, "documents"))
     return D.simhash_pairs(docs, max_hamming=_SIMHASH_K)
 
 
@@ -466,7 +461,7 @@ def q_d20(spark: SparkSession, sf_dir: str) -> DataFrame:
     suppression). Oracle: d13's own generator parameterized with the
     null-safe source-equality tail — the grouped op cannot drift from
     the standalone one."""
-    docs = spark.read.parquet(_pq(sf_dir, "documents"))
+    docs = read_parquet(spark, _pq(sf_dir, "documents"))
     return D.simhash_pairs(
         docs, max_hamming=_SIMHASH_K, group_cols=["source"]
     )
@@ -515,7 +510,7 @@ def q_d7(spark: SparkSession, sf_dir: str) -> DataFrame:
     flag. `WHERE is_keeper` is the deduplicated corpus."""
     from .llm.clusters import dedup_clusters
 
-    docs = spark.read.parquet(_pq(sf_dir, "documents"))
+    docs = read_parquet(spark, _pq(sf_dir, "documents"))
     pairs = D.minhash_lsh_pairs(docs, n=_JACCARD_N, bands=_LSH_BANDS,
                                 rows_per_band=_LSH_ROWS,
                                 threshold=_LSH_P / _LSH_Q)
@@ -554,7 +549,7 @@ def q_d12(spark: SparkSession, sf_dir: str) -> DataFrame:
     its members to one reducer)."""
     from .llm.clusters import dedup_clusters
 
-    docs = spark.read.parquet(_pq(sf_dir, "documents"))
+    docs = read_parquet(spark, _pq(sf_dir, "documents"))
     pairs = D.minhash_lsh_pairs(docs, n=_JACCARD_N, bands=_LSH_BANDS,
                                 rows_per_band=_LSH_ROWS,
                                 threshold=_LSH_P / _LSH_Q)
@@ -585,7 +580,7 @@ def q_d5(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding-cosine near-dup pairs, EXACT all-pairs — planes=0 is an
     explicit opt-in, valid only at small-corpus scale (the ground-truth
     baseline the SRP path in d6 is judged against)."""
-    emb = spark.read.parquet(_pq(sf_dir, "embeddings"))
+    emb = read_parquet(spark, _pq(sf_dir, "embeddings"))
     return S.embedding_cosine_pairs(emb, threshold=_COS_T, planes=0)
 
 
@@ -670,7 +665,7 @@ def q_d6(spark: SparkSession, sf_dir: str) -> DataFrame:
     are sign-hash bucket-mates in any of `tables` hash tables, so the exact
     cosine filter runs on ~N·tables/2^planes candidate rows instead of
     N²/2."""
-    emb = spark.read.parquet(_pq(sf_dir, "embeddings"))
+    emb = read_parquet(spark, _pq(sf_dir, "embeddings"))
     return S.embedding_cosine_pairs(
         emb, threshold=_COS_T, dim=_SRP_DIM,
         planes=_SRP_PLANES, tables=_SRP_TABLES,
@@ -711,7 +706,7 @@ _ANN_ORACLE = f"""
 def q_n1(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact cosine top-k: broadcast the query set, stream the corpus.
     Similarity rounded to 6dp with id tiebreak → deterministic ranking."""
-    emb = spark.read.parquet(_pq(sf_dir, "embeddings"))
+    emb = read_parquet(spark, _pq(sf_dir, "embeddings"))
     queries = emb.where(F.col("vec_id") < _ANN_NQ)
     return S.brute_force_topk(emb, queries, k=_ANN_K)
 
@@ -750,7 +745,7 @@ def q_n2(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows). The md5-derived plane constants make the whole pipeline
     reproducible in SQL — hash-matched like the relational queries; recall
     vs brute force is additionally asserted in tests."""
-    emb = spark.read.parquet(_pq(sf_dir, "embeddings"))
+    emb = read_parquet(spark, _pq(sf_dir, "embeddings"))
     queries = emb.where(F.col("vec_id") < _ANN_NQ)
     return S.lsh_bucketed_topk(emb, queries, dim=_SRP_DIM, k=_ANN_K,
                                planes=_N2_PLANES, tables=_N2_TABLES)
@@ -803,7 +798,7 @@ def q_n3(spark: SparkSession, sf_dir: str) -> DataFrame:
     (~n_probe/n_centroids of the corpus). Centroids are a hash-order
     sample bounded by the CONSTANT n_centroids (never corpus-proportional)
     → the whole pipeline, assignment argmax included, replays in SQL."""
-    emb = spark.read.parquet(_pq(sf_dir, "embeddings"))
+    emb = read_parquet(spark, _pq(sf_dir, "embeddings"))
     queries = emb.where(F.col("vec_id") < _ANN_NQ)
     return S.ivf_topk(emb, queries, k=_ANN_K, n_centroids=_IVF_N_CENTROIDS,
                       n_probe=_IVF_PROBE)
@@ -894,7 +889,7 @@ def q_n4(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash-order init — partition-invariant and engine-portable, so unlike
     a pyspark.ml KMeans fit the whole pipeline (init, assignments, DECIMAL
     -exact means, final probe/rerank) replays as SQL and hash-matches."""
-    emb = spark.read.parquet(_pq(sf_dir, "embeddings"))
+    emb = read_parquet(spark, _pq(sf_dir, "embeddings"))
     queries = emb.where(F.col("vec_id") < _ANN_NQ)
     return S.ivf_topk_kmeans(emb, queries, k=_ANN_K,
                              n_centroids=_IVF_N_CENTROIDS,
@@ -1290,7 +1285,7 @@ def q_n10(spark: SparkSession, sf_dir: str) -> DataFrame:
     the coarse CTEs, the residual CTE, the L2-retargeted trainings,
     and the assembled |c + r̂|² denominator — the quantizer coupling
     is exactly what it pins."""
-    emb = spark.read.parquet(_pq(sf_dir, "embeddings"))
+    emb = read_parquet(spark, _pq(sf_dir, "embeddings"))
     queries = emb.where(F.col("vec_id") < _ANN_NQ)
     return S.ivf_pq_residual_topk(emb, queries, k=_ANN_K, dim=_SRP_DIM,
                                   m_subspaces=_PQ_M, n_codes=_PQ_CODES,
@@ -1325,7 +1320,7 @@ def q_n11(spark: SparkSession, sf_dir: str) -> DataFrame:
     root = _proc_tmp_root("n11", sf_dir)
     shutil.rmtree(root, ignore_errors=True)
     path = os.path.join(root, "pqres")
-    emb = spark.read.parquet(_pq(sf_dir, "embeddings"))
+    emb = read_parquet(spark, _pq(sf_dir, "embeddings"))
     build = emb.where(F.expr(_PQIDX_TRAIN))
     extend = emb.where(~F.expr(_PQIDX_TRAIN))
     S.pq_build_index(build, path, dim=_SRP_DIM, m_subspaces=_PQ_M,
@@ -1387,7 +1382,7 @@ def q_n12(spark: SparkSession, sf_dir: str) -> DataFrame:
     is recall-pinned against in tests/test_llm_ops.py. Aggregations
     are map-side combinable on (query, doc) keys; the 6dp-max /
     exact-DECIMAL-sum discipline keeps both engines bit-equal."""
-    emb = spark.read.parquet(_pq(sf_dir, "embeddings"))
+    emb = read_parquet(spark, _pq(sf_dir, "embeddings"))
     mv = emb.select(
         F.expr(f"vec_id div {_MAXSIM_TOKS}").alias("doc_id"),
         (F.col("vec_id") % _MAXSIM_TOKS).alias("token_id"),
@@ -1408,7 +1403,7 @@ def q_n7(spark: SparkSession, sf_dir: str) -> DataFrame:
     ADC arithmetic; a drift anywhere (slice bounds, assignment
     ties, DECIMAL sums, the reconstruction-norm denominator) breaks
     the hash."""
-    emb = spark.read.parquet(_pq(sf_dir, "embeddings"))
+    emb = read_parquet(spark, _pq(sf_dir, "embeddings"))
     queries = emb.where(F.col("vec_id") < _ANN_NQ)
     return S.pq_topk(emb, queries, k=_ANN_K, dim=_SRP_DIM,
                      m_subspaces=_PQ_M, n_codes=_PQ_CODES,
@@ -1426,7 +1421,7 @@ def q_n8(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle chains the n3 coarse CTEs with n7's shared training + ADC
     generators, so neither quantizer can drift from its standalone
     row."""
-    emb = spark.read.parquet(_pq(sf_dir, "embeddings"))
+    emb = read_parquet(spark, _pq(sf_dir, "embeddings"))
     queries = emb.where(F.col("vec_id") < _ANN_NQ)
     return S.ivf_pq_topk(emb, queries, k=_ANN_K, dim=_SRP_DIM,
                          m_subspaces=_PQ_M, n_codes=_PQ_CODES,
@@ -1449,7 +1444,7 @@ def q_n13(spark: SparkSession, sf_dir: str) -> DataFrame:
     applied to top-k retrieval; the oracle is n8's own chain with the
     refine tail, so the shortlist arithmetic cannot drift from the
     unrefined row."""
-    emb = spark.read.parquet(_pq(sf_dir, "embeddings"))
+    emb = read_parquet(spark, _pq(sf_dir, "embeddings"))
     queries = emb.where(F.col("vec_id") < _ANN_NQ)
     return S.ivf_pq_topk(emb, queries, k=_ANN_K, dim=_SRP_DIM,
                          m_subspaces=_PQ_M, n_codes=_PQ_CODES,
@@ -1519,7 +1514,7 @@ def q_n9(spark: SparkSession, sf_dir: str) -> DataFrame:
     root = _proc_tmp_root("n9", sf_dir)
     shutil.rmtree(root, ignore_errors=True)
     path = os.path.join(root, "pqidx")
-    emb = spark.read.parquet(_pq(sf_dir, "embeddings"))
+    emb = read_parquet(spark, _pq(sf_dir, "embeddings"))
     build = emb.where(F.expr(_PQIDX_TRAIN))
     extend = emb.where(~F.expr(_PQIDX_TRAIN))
     S.pq_build_index(build, path, dim=_SRP_DIM, m_subspaces=_PQ_M,
@@ -1579,7 +1574,7 @@ def _stats_quality_oracle() -> str:
 def q_t1(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Text-stats features + gopher-style quality flags (quality_filter
     runs on top of text_stats — one scan, both operators verified)."""
-    docs = spark.read.parquet(_pq(sf_dir, "documents"))
+    docs = read_parquet(spark, _pq(sf_dir, "documents"))
     return T.quality_filter(docs).select(
         "doc_id", "n_chars_measured", "n_words", "punct_ratio",
         "stopword_ratio", "mean_word_len",
@@ -1649,7 +1644,7 @@ def q_t2(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Both language-ID variants in one row per doc: the stopword-hit
     heuristic plus the char-trigram profile (robust on short text where
     stopwords return 'und')."""
-    docs = spark.read.parquet(_pq(sf_dir, "documents"))
+    docs = read_parquet(spark, _pq(sf_dir, "documents"))
     sw = T.language_id(docs).select(
         "doc_id",
         F.col("lang_pred").alias("lang_stopword"),
@@ -1676,7 +1671,7 @@ def q_t2(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_t3(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Whole-doc fingerprint + BPE-ish token count — both single-scan
     per-doc transforms, folded into one driver row."""
-    docs = spark.read.parquet(_pq(sf_dir, "documents"))
+    docs = read_parquet(spark, _pq(sf_dir, "documents"))
     return T.token_count_bpe_ish(T.fingerprint(docs)).select(
         "doc_id", "doc_fp", "n_tokens"
     )
@@ -1709,7 +1704,7 @@ def q_t5(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Winnowing (rolling-hash) fingerprints: md5-window k-gram hashes,
     per-window minima, distinct — the local-similarity fingerprint set
     (Schleimer et al. SIGMOD'03)."""
-    docs = spark.read.parquet(_pq(sf_dir, "documents"))
+    docs = read_parquet(spark, _pq(sf_dir, "documents"))
     return T.winnowing_fingerprints(docs, k=_WIN_K, window=_WIN_W)
 
 
@@ -1741,7 +1736,7 @@ def q_x8(spark: SparkSession, sf_dir: str) -> DataFrame:
     not). Pure scan-stage filter, zero shuffles."""
     from .llm.sampling import stratified_sample
 
-    docs = spark.read.parquet(_pq(sf_dir, "documents"))
+    docs = read_parquet(spark, _pq(sf_dir, "documents"))
     return stratified_sample(
         docs, "lang", _SAMPLE_FRACS, default_fraction=_SAMPLE_DEFAULT
     ).select("doc_id", "lang")
@@ -1793,7 +1788,7 @@ def q_x9(spark: SparkSession, sf_dir: str) -> DataFrame:
     query pins their composition."""
     from .llm.clusters import dedup_clusters
 
-    docs = spark.read.parquet(_pq(sf_dir, "documents"))
+    docs = read_parquet(spark, _pq(sf_dir, "documents"))
     pairs = D.minhash_lsh_pairs(docs, n=_JACCARD_N, bands=_LSH_BANDS,
                                 rows_per_band=_LSH_ROWS,
                                 threshold=_LSH_P / _LSH_Q)
@@ -1836,7 +1831,7 @@ def q_x12(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus-wide top-100 word bigrams by occurrence — the vocabulary
     seeding pass for tokenizer training. Count shuffle + per-partition
     heap (TakeOrderedAndProject); no global sort."""
-    docs = spark.read.parquet(_pq(sf_dir, "documents"))
+    docs = read_parquet(spark, _pq(sf_dir, "documents"))
     return T.top_ngrams(docs, n=_TOPNG_N, k=_TOPNG_K)
 
 
@@ -1868,7 +1863,7 @@ def q_x11(spark: SparkSession, sf_dir: str) -> DataFrame:
     without array-representation ambiguity between engines."""
     from .llm.similarity import quantize_embeddings
 
-    emb = spark.read.parquet(_pq(sf_dir, "embeddings"))
+    emb = read_parquet(spark, _pq(sf_dir, "embeddings"))
     q = quantize_embeddings(emb)
     return q.select(
         "vec_id", "scale",
@@ -1903,8 +1898,6 @@ def q_x10(spark: SparkSession, sf_dir: str) -> DataFrame:
     truncate, silently grouping same-second rows as frame peers and
     diverging from the oracle's full-precision INTERVAL frame on any
     sub-second data); sums ride DECIMAL so both engines add exactly."""
-    from .sources.files import read_events
-
     ev = read_events(spark, _pq(sf_dir, "events"))
     w = (
         Window.partitionBy("user_id")
@@ -1938,7 +1931,7 @@ def q_m1(spark: SparkSession, sf_dir: str) -> DataFrame:
     metadata — the exact shape a real image/audio decode plugs into."""
     from .llm.multimodal import extract_features
 
-    docs = spark.read.parquet(_pq(sf_dir, "documents")).select(
+    docs = read_parquet(spark, _pq(sf_dir, "documents")).select(
         "doc_id", F.col("text").cast("binary").alias("payload")
     )
     return extract_features(docs, fake_decode=True).select(
@@ -1983,7 +1976,7 @@ def q_m2(spark: SparkSession, sf_dir: str) -> DataFrame:
     Arrow input and typed output schema are production-real)."""
     from .llm.multimodal import resize_images
 
-    docs = spark.read.parquet(_pq(sf_dir, "documents")).select(
+    docs = read_parquet(spark, _pq(sf_dir, "documents")).select(
         "doc_id", F.col("text").cast("binary").alias("payload")
     )
     return resize_images(docs, max_side=_RESIZE_MAX)
@@ -2019,7 +2012,7 @@ def q_m3(spark: SparkSession, sf_dir: str) -> DataFrame:
     frames per doc."""
     from .llm.multimodal import sample_frames
 
-    docs = spark.read.parquet(_pq(sf_dir, "documents")).select(
+    docs = read_parquet(spark, _pq(sf_dir, "documents")).select(
         "doc_id", F.col("text").cast("binary").alias("payload")
     )
     return sample_frames(docs, every_ms=_FRAME_EVERY_MS,
@@ -2092,7 +2085,7 @@ def q_t6(spark: SparkSession, sf_dir: str) -> DataFrame:
     audit counts — pure regexp codegen, scan-stage, zero shuffles."""
     from .llm.scrub import pii_scrub
 
-    docs = spark.read.parquet(_pq(sf_dir, "documents"))
+    docs = read_parquet(spark, _pq(sf_dir, "documents"))
     inj = docs.select("doc_id", F.expr(_PII_INJ).alias("text"))
     return pii_scrub(inj).select(
         "doc_id", "pii_email", "pii_ssn", "pii_ipv4", "pii_phone",
@@ -2134,7 +2127,7 @@ def _repetition_oracle() -> str:
 def q_t7(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gopher-style repetition quality features (dup-word fraction, top /
     duplicate 2-gram fractions) per document."""
-    docs = spark.read.parquet(_pq(sf_dir, "documents"))
+    docs = read_parquet(spark, _pq(sf_dir, "documents"))
     return T.repetition_stats(docs, n=2)
 
 
@@ -2180,7 +2173,7 @@ def q_d8(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sub-document exact dedup: aligned 10-word spans, corpus-wide
     keep-first, reassembled — the line-level-dedup shape for corpora
     without line structure. Injected exact-dup docs vanish entirely."""
-    docs = spark.read.parquet(_pq(sf_dir, "documents"))
+    docs = read_parquet(spark, _pq(sf_dir, "documents"))
     corpus = docs.select("doc_id", "text").unionByName(
         docs.where(F.col("doc_id") % 10 == 0).select(
             (F.col("doc_id") + 1000000).alias("doc_id"), "text"
@@ -2285,7 +2278,7 @@ def q_d10(spark: SparkSession, sf_dir: str) -> DataFrame:
     catches the one-word-shifted duplicated passages the aligned d8
     pass misses (injected here as 'zzz '-prefixed replicas, which
     collapse to the single word 'zzz'; exact-dup replicas vanish)."""
-    docs = spark.read.parquet(_pq(sf_dir, "documents"))
+    docs = read_parquet(spark, _pq(sf_dir, "documents"))
     base = docs.select("doc_id", "text")
     corpus = base.unionByName(
         docs.where(F.col("doc_id") % 20 == 0).select(
@@ -2356,7 +2349,7 @@ def q_d14(spark: SparkSession, sf_dir: str) -> DataFrame:
     injected footers — one mixed-case, exercising the lower()
     matching — plus any sentence-line the corpus genuinely repeats),
     docs reassembled from surviving lines in order."""
-    docs = spark.read.parquet(_pq(sf_dir, "documents"))
+    docs = read_parquet(spark, _pq(sf_dir, "documents"))
     newsletter = F.when(
         F.col("doc_id") % 2 == 0,
         F.lit("\nSubscribe to our newsletter today"),
@@ -2424,7 +2417,7 @@ def q_t21(spark: SparkSession, sf_dir: str) -> DataFrame:
     repair dual of t7's duplicate-line-fraction gate; d14 handles the
     ACROSS-docs case). Keep-first rides a min(struct) hash aggregate —
     no windows, no joins, two map-side-combinable shuffles."""
-    docs = spark.read.parquet(_pq(sf_dir, "documents"))
+    docs = read_parquet(spark, _pq(sf_dir, "documents"))
     base = F.replace(F.col("text"), F.lit(". "), F.lit(".\n"))
     first = F.substring_index(base, "\n", 1)
     corpus = docs.select(
@@ -2529,7 +2522,7 @@ def _incr_split(spark: SparkSession, sf_dir: str):
     = even doc ids (indexed), "today's batch" = odd ids + replicas of
     every doc_id % 10 == 0 under a shifted id namespace (guaranteed
     cross-corpus near-dups). Mirrors _INCR_SQL exactly."""
-    docs = spark.read.parquet(_pq(sf_dir, "documents")).select(
+    docs = read_parquet(spark, _pq(sf_dir, "documents")).select(
         "doc_id", "text"
     )
     corpus = docs.where(F.col("doc_id") % 2 == 0)
@@ -2642,7 +2635,7 @@ def q_d16(spark: SparkSession, sf_dir: str) -> DataFrame:
     pin the run-merge (42-word merged run, both dropped). Same gram /
     canonical / coverage machinery as d10, plus the forward/backward
     boundary-carry run merge on the same doc-id partition."""
-    docs = spark.read.parquet(_pq(sf_dir, "documents"))
+    docs = read_parquet(spark, _pq(sf_dir, "documents"))
     corpus = docs.select(
         "doc_id",
         F.concat(
@@ -2729,7 +2722,7 @@ def _emb_incr_split(spark: SparkSession, sf_dir: str):
     replicas of every vec_id % 10 == 0 vector under a shifted id
     namespace. Mirrors _EMB_INCR_SQL exactly (the _incr_split pattern,
     vector modality)."""
-    emb = spark.read.parquet(_pq(sf_dir, "embeddings")).select(
+    emb = read_parquet(spark, _pq(sf_dir, "embeddings")).select(
         "vec_id", "embedding"
     )
     corpus = emb.where(F.col("vec_id") % 2 == 0)
@@ -3235,7 +3228,7 @@ def q_x28(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .llm.dedup_index import minhash_build_index
     from .streaming.admission import start_index_admission
 
-    docs = spark.read.parquet(_pq(sf_dir, "documents")).select(
+    docs = read_parquet(spark, _pq(sf_dir, "documents")).select(
         "doc_id", "text"
     )
     corpus = docs.where(F.col("doc_id") % 2 == 0)
@@ -3279,7 +3272,7 @@ def q_x28(spark: SparkSession, sf_dir: str) -> DataFrame:
         raise TimeoutError(
             "x28 availableNow drain did not finish within 600s"
         )
-    return spark.read.parquet(out).select(
+    return read_parquet(spark, out).select(
         "doc_id", "text", F.col("epoch").cast("int").alias("epoch")
     )
 
@@ -3436,7 +3429,7 @@ def q_x29(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .llm.dedup_index import embedding_build_index
     from .streaming.admission import start_index_admission
 
-    emb = spark.read.parquet(_pq(sf_dir, "embeddings")).select(
+    emb = read_parquet(spark, _pq(sf_dir, "embeddings")).select(
         "vec_id", "embedding"
     )
     corpus = emb.where(F.col("vec_id") % 2 == 0)
@@ -3472,7 +3465,7 @@ def q_x29(spark: SparkSession, sf_dir: str) -> DataFrame:
         raise TimeoutError(
             "x29 availableNow drain did not finish within 600s"
         )
-    return spark.read.parquet(out).select(
+    return read_parquet(spark, out).select(
         "vec_id", F.col("epoch").cast("int").alias("epoch")
     )
 
@@ -3541,7 +3534,7 @@ def q_x13(spark: SparkSession, sf_dir: str) -> DataFrame:
     end, so the sample is reproducible on any cluster and engine."""
     from .llm.sampling import mixture_sample
 
-    docs = spark.read.parquet(_pq(sf_dir, "documents"))
+    docs = read_parquet(spark, _pq(sf_dir, "documents"))
     return mixture_sample(docs, _MIX_WEIGHTS, seed=_MIX_SEED).select(
         "doc_id", "source", "lang"
     )
@@ -3592,7 +3585,7 @@ def q_x26(spark: SparkSession, sf_dir: str) -> DataFrame:
     identity for downstream packing."""
     from .llm.sampling import mixture_upsample
 
-    docs = spark.read.parquet(_pq(sf_dir, "documents")).select(
+    docs = read_parquet(spark, _pq(sf_dir, "documents")).select(
         "doc_id", "source", "lang"
     )
     return mixture_upsample(
@@ -3631,7 +3624,7 @@ def q_d9(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Train/test decontamination (GPT-3 13-gram rule): flag corpus docs
     sharing any 13-gram with the eval set. Eval grams broadcast; the
     probe is a map-side hash join, no shuffle by gram."""
-    docs = spark.read.parquet(_pq(sf_dir, "documents"))
+    docs = read_parquet(spark, _pq(sf_dir, "documents"))
     evalset = docs.where(F.expr(_DECONTAM_PRED)).select(
         (F.col("doc_id") + 500000).alias("doc_id"), "text"
     )
@@ -3652,7 +3645,7 @@ def q_d21(spark: SparkSession, sf_dir: str) -> DataFrame:
     bloom_bits here is deliberately small (2^18 for ~29k eval grams at
     5 hashes ≈ a few % FPR) so the verify join provably scrubs real
     false positives, not just a zero-FPR fixture."""
-    docs = spark.read.parquet(_pq(sf_dir, "documents"))
+    docs = read_parquet(spark, _pq(sf_dir, "documents"))
     evalset = docs.where(F.expr(_DECONTAM_PRED)).select(
         (F.col("doc_id") + 500000).alias("doc_id"), "text"
     )
@@ -3761,8 +3754,8 @@ def q_x14(spark: SparkSession, sf_dir: str) -> DataFrame:
     multi-branch analogue of d2/d3's scoped shingle cache, and exactly
     the stage-materialization a 100 TB curation run would do by writing
     intermediate tables. (Lazy localCheckpoints held these boundaries
-    through r14; their eager toRdd cost ~1s of driver-side planning per
-    boundary per invocation — OPTIMIZATION_r15.md.)"""
+    before; their eager toRdd cost 0.8-1.0 s of driver-side planning per
+    boundary per invocation at sf0.1, see _stage_cache.)"""
     from .plans import Engine, OpSpec, ScanSpec
 
     eng = Engine(spark)
@@ -3840,7 +3833,7 @@ def q_t8(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Greedy sequence packing: where every doc's tokens land in the
     fixed-length (512) training sequences, packed per source shard —
     pure window math, one shuffle on the shard key."""
-    docs = spark.read.parquet(_pq(sf_dir, "documents"))
+    docs = read_parquet(spark, _pq(sf_dir, "documents"))
     return T.pack_sequences(docs, seq_len=_PACK_SEQ_LEN)
 
 
@@ -3921,7 +3914,7 @@ def q_t11(spark: SparkSession, sf_dir: str) -> DataFrame:
     the blocklist literal, flag — zero shuffles, scan-stage."""
     from .llm.scrub import url_blocklist_filter
 
-    docs = spark.read.parquet(_pq(sf_dir, "documents"))
+    docs = read_parquet(spark, _pq(sf_dir, "documents"))
     inj = docs.select("doc_id", F.expr(_URL_INJ).alias("text"))
     return url_blocklist_filter(inj, list(_BLOCKED_DOMAINS))
 
@@ -3964,7 +3957,7 @@ def q_t10(spark: SparkSession, sf_dir: str) -> DataFrame:
     signal, in-engine): avg -ln p(word) under the corpus's own unigram
     distribution — per-word surprisal rounded BEFORE an exact decimal
     sum, so accumulation order can't flip bits vs the oracle."""
-    docs = spark.read.parquet(_pq(sf_dir, "documents"))
+    docs = read_parquet(spark, _pq(sf_dir, "documents"))
     return T.surprisal_score(docs.select("doc_id", "text"))
 
 
@@ -4034,7 +4027,7 @@ def q_t19(spark: SparkSession, sf_dir: str) -> DataFrame:
     exchanges."""
     from .llm.text import gopher_line_rules
 
-    docs = spark.read.parquet(_pq(sf_dir, "documents"))
+    docs = read_parquet(spark, _pq(sf_dir, "documents"))
     return gopher_line_rules(docs.select("doc_id", "text")).drop("text")
 
 
@@ -4075,7 +4068,7 @@ def q_t20(spark: SparkSession, sf_dir: str) -> DataFrame:
     the explode, per the bind-before-explode rule)."""
     from .llm.text import chunk_documents
 
-    docs = spark.read.parquet(_pq(sf_dir, "documents"))
+    docs = read_parquet(spark, _pq(sf_dir, "documents"))
     return chunk_documents(docs.select("doc_id", "text"),
                            max_words=_CHUNK_MAX_WORDS)
 
@@ -4102,7 +4095,7 @@ def q_t18(spark: SparkSession, sf_dir: str) -> DataFrame:
     down-samples tail."""
     from .llm.text import perplexity_partition, surprisal_score
 
-    docs = spark.read.parquet(_pq(sf_dir, "documents"))
+    docs = read_parquet(spark, _pq(sf_dir, "documents"))
     scored = surprisal_score(docs.select("doc_id", "text")).join(
         docs.select("doc_id", "lang"), "doc_id"
     )
@@ -4126,7 +4119,7 @@ def q_t9(spark: SparkSession, sf_dir: str) -> DataFrame:
     engine remains the SQL-mirrorable spec the oracle embeds."""
     from .llm.bpe import token_count_bpe_arrow
 
-    docs = spark.read.parquet(_pq(sf_dir, "documents"))
+    docs = read_parquet(spark, _pq(sf_dir, "documents"))
     counted = token_count_bpe_arrow(docs.select("doc_id", "source", "text"))
     return T.pack_sequences(
         counted.drop("text"), seq_len=_PACK_SEQ_LEN, tokens_col="n_tokens"
@@ -4291,7 +4284,7 @@ def q_t12(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Logistic quality classifier over the text_stats features (the
     fasttext-classifier shape for pretraining-quality gating): pure
     Column, weights folded into the plan, zero shuffles."""
-    docs = spark.read.parquet(_pq(sf_dir, "documents"))
+    docs = read_parquet(spark, _pq(sf_dir, "documents"))
     return T.classifier_score(docs.select("doc_id", "text")).select(
         "doc_id", "n_words", "quality_score", "quality_keep"
     )
@@ -4343,7 +4336,7 @@ def q_x16(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .llm.clusters import dedup_clusters
     from .llm.sampling import split_assign
 
-    docs = spark.read.parquet(_pq(sf_dir, "documents"))
+    docs = read_parquet(spark, _pq(sf_dir, "documents"))
     pairs = D.minhash_lsh_pairs(docs, n=_JACCARD_N, bands=_LSH_BANDS,
                                 rows_per_band=_LSH_ROWS,
                                 threshold=_LSH_P / _LSH_Q)
@@ -4381,7 +4374,7 @@ def q_x17(spark: SparkSession, sf_dir: str) -> DataFrame:
     pre-prune to their local top-k before the shuffle."""
     from .llm.sampling import top_k_sample
 
-    docs = spark.read.parquet(_pq(sf_dir, "documents"))
+    docs = read_parquet(spark, _pq(sf_dir, "documents"))
     return top_k_sample(
         docs.select("doc_id", "source"), _TOPK_K, strata_col="source"
     )
@@ -4456,7 +4449,7 @@ def q_t17(spark: SparkSession, sf_dir: str) -> DataFrame:
     collect."""
     from .llm.text import backoff_surprisal
 
-    docs = spark.read.parquet(_pq(sf_dir, "documents"))
+    docs = read_parquet(spark, _pq(sf_dir, "documents"))
     lm = docs.where(F.col("doc_id") % 2 == 0)
     return backoff_surprisal(
         docs.select("doc_id", "text"), lm.select("doc_id", "text")
@@ -4563,7 +4556,7 @@ def q_x18(spark: SparkSession, sf_dir: str) -> DataFrame:
     compiles to TakeOrderedAndProject — no collect, no full sort."""
     from .llm.sampling import dsir_select
 
-    docs = spark.read.parquet(_pq(sf_dir, "documents"))
+    docs = read_parquet(spark, _pq(sf_dir, "documents"))
     target = docs.where(F.col("source") == _DSIR_TARGET_SRC)
     # exact DECIMAL math end-to-end (ordering included); the final cast
     # to DOUBLE only normalizes the wire dtype for the driver's
@@ -4724,7 +4717,7 @@ def q_d11(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash-matches its SQL replay."""
     from .llm.similarity import semantic_dedup
 
-    emb = spark.read.parquet(_pq(sf_dir, "embeddings"))
+    emb = read_parquet(spark, _pq(sf_dir, "embeddings"))
     return semantic_dedup(emb, threshold=_SEMDEDUP_T,
                           n_centroids=_IVF_N_CENTROIDS, n_iter=_KM_ITER)
 
@@ -4770,7 +4763,7 @@ def q_t13(spark: SparkSession, sf_dir: str) -> DataFrame:
     ceil(total/target) hash-buckets before packing, so a hot domain
     cannot produce one monster shard file/window — the counting pass
     folds to a literal CASE, the bucket is the md5 content hash."""
-    docs = spark.read.parquet(_pq(sf_dir, "documents"))
+    docs = read_parquet(spark, _pq(sf_dir, "documents"))
     keyed = T.derive_shard_key(
         docs.select("doc_id", "source", "text"),
         target_tokens=_SHARD_TARGET,
@@ -4800,7 +4793,7 @@ def q_t14(spark: SparkSession, sf_dir: str) -> DataFrame:
     bytes-level Column == Arrow == DuckDB parity is pytest-pinned."""
     from .llm.bpe import token_count_bpe_arrow
 
-    docs = spark.read.parquet(_pq(sf_dir, "documents"))
+    docs = read_parquet(spark, _pq(sf_dir, "documents"))
     return token_count_bpe_arrow(
         docs.select("doc_id", "text"), level="bytes"
     ).select("doc_id", "n_tokens")
@@ -4837,7 +4830,7 @@ def q_t15(spark: SparkSession, sf_dir: str) -> DataFrame:
     gpt2-level Column == Arrow == DuckDB parity is pytest-pinned."""
     from .llm.bpe import GPT2_FIXTURE_MERGES, token_count_bpe_arrow
 
-    docs = spark.read.parquet(_pq(sf_dir, "documents"))
+    docs = read_parquet(spark, _pq(sf_dir, "documents"))
     docs = docs.select(
         "doc_id", F.concat(F.col("text"), F.lit(_GPT2_SUFFIX)).alias("text")
     )
@@ -4875,7 +4868,7 @@ def q_t16(spark: SparkSession, sf_dir: str) -> DataFrame:
     UTF-8 byte count as Spark octet_length. Same shape: one bounded
     counting pass folds to a literal CASE, md5 bucket, zero corpus
     shuffles."""
-    docs = spark.read.parquet(_pq(sf_dir, "documents"))
+    docs = read_parquet(spark, _pq(sf_dir, "documents"))
     return T.derive_shard_key(
         docs.select("doc_id", "source", "text"),
         target_bytes=_SHARD_TARGET_BYTES,
@@ -4973,7 +4966,7 @@ def q_x20(spark: SparkSession, sf_dir: str) -> DataFrame:
     error to be read off (b=12 → ~1.6% standard error)."""
     from .llm import sketch as SK
 
-    li = spark.read.parquet(_pq(sf_dir, "lineitem")).select(
+    li = read_parquet(spark, _pq(sf_dir, "lineitem")).select(
         "l_orderkey", "l_partkey"
     )
     halves = [
@@ -5075,7 +5068,7 @@ def q_x21(spark: SparkSession, sf_dir: str) -> DataFrame:
     across engines."""
     from .llm import sketch as SK
 
-    docs = spark.read.parquet(_pq(sf_dir, "documents")).select(
+    docs = read_parquet(spark, _pq(sf_dir, "documents")).select(
         "doc_id", F.length("text").alias("len")
     )
     halves = [
@@ -5103,7 +5096,7 @@ def q_x23(spark: SparkSession, sf_dir: str) -> DataFrame:
     identity; exact distinct rides alongside per group."""
     from .llm import sketch as SK
 
-    docs = spark.read.parquet(_pq(sf_dir, "documents")).select(
+    docs = read_parquet(spark, _pq(sf_dir, "documents")).select(
         "doc_id", "lang", "text"
     )
     halves = [
@@ -5178,7 +5171,7 @@ def q_x27(spark: SparkSession, sf_dir: str) -> DataFrame:
     parametrized generators as the standalone x23/x24 rows."""
     from .llm import sketch as SK
 
-    docs = spark.read.parquet(_pq(sf_dir, "documents")).select(
+    docs = read_parquet(spark, _pq(sf_dir, "documents")).select(
         "source", "text", F.length("text").alias("len")
     )
     return SK.corpus_report(
@@ -5198,7 +5191,7 @@ def q_x24(spark: SparkSession, sf_dir: str) -> DataFrame:
     the grouped merge identity rides the hash match."""
     from .llm import sketch as SK
 
-    docs = spark.read.parquet(_pq(sf_dir, "documents")).select(
+    docs = read_parquet(spark, _pq(sf_dir, "documents")).select(
         "doc_id", "lang", F.length("text").alias("len")
     )
     halves = [
@@ -5282,7 +5275,7 @@ def q_n5(spark: SparkSession, sf_dir: str) -> DataFrame:
     TakeOrderedAndProject."""
     from .llm.search import bm25_topk
 
-    docs = spark.read.parquet(_pq(sf_dir, "documents"))
+    docs = read_parquet(spark, _pq(sf_dir, "documents"))
     return bm25_topk(docs.select("doc_id", "text"), _BM25_QUERY,
                      k=_BM25_K)
 
@@ -5344,8 +5337,8 @@ def q_n6(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .llm import similarity as S
     from .llm.search import bm25_topk, rrf_fuse
 
-    docs = spark.read.parquet(_pq(sf_dir, "documents"))
-    emb = spark.read.parquet(_pq(sf_dir, "embeddings"))
+    docs = read_parquet(spark, _pq(sf_dir, "documents"))
+    emb = read_parquet(spark, _pq(sf_dir, "embeddings"))
     lex = bm25_topk(docs.select("doc_id", "text"), _BM25_QUERY,
                     k=_HYB_N)
     dense = S.brute_force_topk(
@@ -5468,7 +5461,7 @@ def q_x33(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .llm.dedup_index import simhash_build_index
     from .streaming.admission import start_index_admission
 
-    docs = spark.read.parquet(_pq(sf_dir, "documents")).select(
+    docs = read_parquet(spark, _pq(sf_dir, "documents")).select(
         "doc_id", "text"
     )
     corpus = docs.where(F.col("doc_id") % 2 == 0)
@@ -5504,7 +5497,7 @@ def q_x33(spark: SparkSession, sf_dir: str) -> DataFrame:
         raise TimeoutError(
             "x33 availableNow drain did not finish within 600s"
         )
-    return spark.read.parquet(out).select(
+    return read_parquet(spark, out).select(
         "doc_id", "text", F.col("epoch").cast("int").alias("epoch")
     )
 
@@ -5553,7 +5546,7 @@ def _png_fixture(spark: SparkSession, sf_dir: str) -> DataFrame:
             yield pd.DataFrame({"doc_id": ids, "payload": payloads})
 
     return (
-        spark.read.parquet(_pq(sf_dir, "documents"))
+        read_parquet(spark, _pq(sf_dir, "documents"))
         .select("doc_id")
         .mapInPandas(gen, "doc_id long, payload binary")
     )
@@ -5737,7 +5730,7 @@ def _jpeg_fixture(spark: SparkSession, sf_dir: str) -> DataFrame:
             yield pd.DataFrame({"doc_id": ids, "payload": payloads})
 
     return (
-        spark.read.parquet(_pq(sf_dir, "documents"))
+        read_parquet(spark, _pq(sf_dir, "documents"))
         .select("doc_id")
         .mapInPandas(gen, "doc_id long, payload binary")
     )
@@ -5815,7 +5808,7 @@ def _wav_fixture(spark: SparkSession, sf_dir: str) -> DataFrame:
             yield pd.DataFrame({"doc_id": ids, "payload": payloads})
 
     return (
-        spark.read.parquet(_pq(sf_dir, "documents"))
+        read_parquet(spark, _pq(sf_dir, "documents"))
         .select("doc_id")
         .mapInPandas(gen, "doc_id long, payload binary")
     )
@@ -5908,7 +5901,7 @@ def _y4m_fixture(spark: SparkSession, sf_dir: str) -> DataFrame:
             yield pd.DataFrame({"doc_id": ids, "payload": payloads})
 
     return (
-        spark.read.parquet(_pq(sf_dir, "documents"))
+        read_parquet(spark, _pq(sf_dir, "documents"))
         .select("doc_id")
         .mapInPandas(gen, "doc_id long, payload binary")
     )
@@ -6001,7 +5994,7 @@ def q_x34(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .llm.search import bm25_build_index, bm25_search_index
     from .streaming.admission import start_index_admission
 
-    docs = spark.read.parquet(_pq(sf_dir, "documents")).select(
+    docs = read_parquet(spark, _pq(sf_dir, "documents")).select(
         "doc_id", "text"
     )
     corpus = docs.where(F.col("doc_id") % 2 == 0)
@@ -6132,7 +6125,7 @@ def q_x35(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .llm import sketch as SK
     from .llm.text import _words
 
-    docs = spark.read.parquet(_pq(sf_dir, "documents")).select(
+    docs = read_parquet(spark, _pq(sf_dir, "documents")).select(
         "doc_id", "text"
     )
     tok = docs.select(
@@ -6167,7 +6160,7 @@ def q_x36(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .llm import sketch as SK
     from .llm.text import _words
 
-    docs = spark.read.parquet(_pq(sf_dir, "documents")).select(
+    docs = read_parquet(spark, _pq(sf_dir, "documents")).select(
         "source", "doc_id", "text"
     )
     tok = docs.select(

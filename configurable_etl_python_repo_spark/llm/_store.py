@@ -634,9 +634,11 @@ def read_committed(
     # no local-filesystem probing that an object-store path would
     # defeat
     dirs = [f"{root}/seg={s}" for s in segments]
-    return (
-        spark.read.option("basePath", root).parquet(*dirs).drop("seg")
-    )
+    from ..sources.files import read_parquet
+
+    return read_parquet(
+        spark, *dirs, options={"basePath": root}
+    ).drop("seg")
 
 
 # ---------------------------------------------------------------------------
@@ -713,8 +715,10 @@ def read_deletes(
         return None
     root = _rel_root(path, "_deletes")
     dirs = [f"{root}/seg={s}" for s in tomb]
+    from ..sources.files import read_parquet
+
     return (
-        spark.read.option("basePath", root).parquet(*dirs)
+        read_parquet(spark, *dirs, options={"basePath": root})
         .drop("seg").select("id").distinct()
     )
 

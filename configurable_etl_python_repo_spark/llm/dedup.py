@@ -20,6 +20,7 @@ from fractions import Fraction
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegralType
 
 
 def _words(text_col):
@@ -848,7 +849,7 @@ def dedup_spans(
     # NOTE the count window runs over the SPAN rows — 1/k of the word
     # stream, on the exchange the span build already paid. Fusing it
     # into the span-build window node was measured SLOWER (it would
-    # count the full word stream instead): see OPTIMIZATION_r15.md.
+    # count the full word stream instead).
     kept = (
         spans.withColumn("__n_spans",
                          F.count(F.lit(1)).over(Window.partitionBy("id")))
@@ -906,15 +907,17 @@ def dedup_substrings(
 
     Plan shape: posexplode + window LEADs build every-position grams in
     whole-stage codegen (one shuffle on doc id); the canonical occurrence
-    per gram is min(struct(id, pos)) — a HashAggregate with MAP-SIDE
-    PARTIAL COMBINE, so a boilerplate gram duplicated millions of times
-    ships <= 1 candidate per map partition; occurrences learn their
-    canonical via an equi-join on gram (AQE splits skewed gram keys —
-    a join, deliberately not a window over gram, which would sort every
-    copy of a hot gram on one reducer); duplicate-coverage is a
-    ROWS-frame rolling max over [p-k+1, p] per doc; reassembly is the
-    dedup_spans ordered collect_list. Four linear shuffles, no
-    all-pairs joins, no driver state — 100 TB safe.
+    per gram is the min of the packed DECIMAL id * 2^32 + pos (order-
+    isomorphic to (id, pos), hence integral ids only: a string or
+    fractional id_col is refused with ValueError) — a HashAggregate
+    with MAP-SIDE PARTIAL COMBINE, so a boilerplate gram duplicated
+    millions of times ships <= 1 candidate per map partition;
+    occurrences learn their canonical via an equi-join on gram (AQE
+    splits skewed gram keys — a join, deliberately not a window over
+    gram, which would sort every copy of a hot gram on one reducer);
+    duplicate-coverage is a ROWS-frame rolling max over [p-k+1, p] per
+    doc; reassembly is the dedup_spans ordered collect_list. Four linear
+    shuffles, no all-pairs joins, no driver state — 100 TB safe.
 
     Docs shorter than k words carry no full gram and pass through
     verbatim; docs whose every word is covered disappear.
@@ -939,6 +942,16 @@ def dedup_substrings(
         raise ValueError(
             f"min_match_words must be >= k={k} (a covered run is never "
             f"shorter than one gram), got {min_match_words}"
+        )
+    id_type = df.schema[id_col].dataType
+    if not isinstance(id_type, IntegralType):
+        # the packed key below casts id to DECIMAL(38,0): a non-numeric
+        # string id casts to NULL (its grams never match) or fails under
+        # ANSI, and a fractional one rounds, merging distinct documents'
+        # keep-first order
+        raise ValueError(
+            f"dedup_substrings needs an integral id_col; {id_col!r} is "
+            f"{id_type.simpleString()}"
         )
 
     w0 = df.select(

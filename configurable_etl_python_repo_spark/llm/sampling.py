@@ -21,6 +21,12 @@ from pyspark.sql import functions as F
 
 _SCALE = 1 << 32
 
+#: upper bound on DSIR's `buckets`: dsir_weights force-broadcasts the
+#: per-bucket lambda table (<= buckets rows of BIGINT + DECIMAL(18,6)),
+#: so its size must stay a small constant; 2^20 rows is tens of MB of
+#: hashed relation on every executor, and 100x the DSIR paper's 10k
+DSIR_MAX_BUCKETS = 1 << 20
+
 
 def _bucket(key_col, seed: str, hex_chars: int = 8):
     """Uniform integer derived from the row key: the first `hex_chars`
@@ -391,8 +397,11 @@ def dsir_weights(
 
     Output: (id, n_grams, logw DECIMAL(28,6)); docs with zero grams are
     absent (no evidence either way), documented like surprisal_score."""
-    if buckets < 2:
-        raise ValueError(f"buckets must be >= 2, got {buckets}")
+    if not 2 <= buckets <= DSIR_MAX_BUCKETS:
+        raise ValueError(
+            f"buckets must be in [2, {DSIR_MAX_BUCKETS}] (the lambda table "
+            f"is broadcast), got {buckets}"
+        )
     tgt_text = target_text_col if target_text_col is not None else text_col
 
     def bucketed(grams: DataFrame) -> DataFrame:

@@ -512,9 +512,11 @@ def op_groupby_slice(engine: "Engine", spec: OpSpec) -> Result:
 
 def op_sql(engine: "Engine", spec: OpSpec) -> Result:
     """SQL — engine extension: run a Spark SQL statement over the current
-    bindings (every registry binding is mirrored as a temp view). The
-    escape hatch when the op vocabulary can't express something; Catalyst
-    sees one plan either way. args: query."""
+    bindings (mirrored as temp views right before the statement is
+    analyzed, so it sees the latest binding of every name). The escape
+    hatch when the op vocabulary can't express something; Catalyst sees
+    one plan either way. args: query."""
+    engine.registry.register_views()
     return engine.spark.sql(spec.args["query"]), None
 
 

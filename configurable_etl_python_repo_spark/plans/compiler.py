@@ -110,17 +110,20 @@ class Engine:
                 return self.analyte_results[key]
             return self.registry.get(key)
         if src == "parquet":
-            return self.spark.read.options(**scan.options).parquet(scan.path)
+            from ..sources.files import read_parquet
+
+            return read_parquet(self.spark, scan.path, options=scan.options)
         if src == "parquet-stream":
             # streaming source as a first-class config scan: a program
             # (not just the library) can declare a stream and pipe it
             # through streaming-legal ops (windows §2.9). readStream
-            # requires a schema up front; the one batch-side listing of
-            # the same path supplies it — no data is read.
-            schema = (
-                self.spark.read.options(**scan.options)
-                .parquet(scan.path).schema
-            )
+            # requires a schema up front; the batch-side reader of the
+            # same path supplies it — no data is read.
+            from ..sources.files import read_parquet
+
+            schema = read_parquet(
+                self.spark, scan.path, options=scan.options
+            ).schema
             return (
                 self.spark.readStream.options(**scan.options)
                 .schema(schema).parquet(scan.path)
@@ -137,6 +140,8 @@ class Engine:
 
             return read_sas(self.spark, scan.path, **scan.options)
         if src == "table":
+            # a table scan may name a binding, as SQL may
+            self.registry.register_views()
             return self.spark.table(scan.path)
         if src == "bronze":
             from ..sources.bronze import read_bronze

@@ -3,8 +3,11 @@
 The reference stores every working relation in the Python ``globals()`` dict
 (`Configurable_ETL_Python.py:447,452,462`) and rebinds names freely. We keep
 the rebinding semantics (a name is a mutable binding to an immutable
-DataFrame) but in an explicit object, and mirror every binding as a Spark
-temp view so the same relations are addressable from SQL.
+DataFrame) but in an explicit object. Bindings become addressable from
+SQL through `register_views`, which mirrors the current bindings as Spark
+temp views; the SQL op (and a `table` scan) calls it right before it
+resolves names, so `bind` pays no catalog call (~9 ms of py4j per view,
+and most programs never use SQL).
 """
 
 from __future__ import annotations
@@ -20,14 +23,18 @@ _VIEW_SAFE = re.compile(r"[^A-Za-z0-9_]")
 class Registry:
     """Mutable name → immutable DataFrame bindings, SQL-visible."""
 
-    def __init__(self, spark: SparkSession, register_views: bool = True):
+    def __init__(self, spark: SparkSession):
         self.spark = spark
         self._bindings: dict[str, DataFrame] = {}
-        self._register_views = register_views
 
     def bind(self, name: str, df: DataFrame) -> None:
         self._bindings[name] = df
-        if self._register_views:
+
+    def register_views(self) -> None:
+        """Mirror every current binding as a temp view (non-identifier
+        characters in the name become `_`), so SQL sees the latest
+        binding of each name."""
+        for name, df in self._bindings.items():
             df.createOrReplaceTempView(_VIEW_SAFE.sub("_", name))
 
     def get(self, name: str) -> DataFrame:

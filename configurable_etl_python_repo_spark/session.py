@@ -10,8 +10,14 @@ paths, UTC session timezone so timestamp semantics match the DuckDB oracle.
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import SparkSession
+
+_LOCAL_MASTER = re.compile(r"local(\[.*\])?")
+#: paths a local-master driver lists serially before Spark's listing job
+#: (~1 ms per directory against ~0.5 s of job overhead) could pay off
+_LOCAL_LISTING_THRESHOLD = 1024
 
 
 def get_spark(
@@ -52,6 +58,16 @@ def get_spark(
         .config("spark.ui.enabled", os.environ.get("SPARK_UI", "false"))
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "48g"))
     )
+    if _LOCAL_MASTER.fullmatch(master):
+        # Spark lists more than `threshold` paths with a distributed job.
+        # On a local master its tasks run on the driver's own threads, so
+        # the job only adds scheduling: a store read listing ~60 kb=/ab=
+        # dirs took ~0.55 s through a 64-task job against ~0.05 s listed
+        # serially. A cluster master keeps Spark's default.
+        builder = builder.config(
+            "spark.sql.sources.parallelPartitionDiscovery.threshold",
+            str(_LOCAL_LISTING_THRESHOLD),
+        )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()

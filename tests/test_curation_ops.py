@@ -5,6 +5,7 @@ DuckDB parity; these cover the edge semantics oracles can't isolate)."""
 
 import hashlib
 
+import pytest
 from pyspark.sql import functions as F
 
 from configurable_etl_python_repo_spark.llm.dedup import dedup_spans
@@ -1211,6 +1212,22 @@ def test_dedup_substrings_min_match_words_runs(spark):
 
     with _pytest.raises(ValueError, match="min_match_words"):
         dedup_substrings(df, k=10, min_match_words=5)
+
+
+@pytest.mark.parametrize("id_type", ["string", "double", "decimal(10,2)"])
+def test_dedup_substrings_refuses_non_integral_ids(spark, id_type):
+    """The packed DECIMAL keep-first key is order-isomorphic to (id, pos)
+    for integral ids only: a string id would cast to NULL (or fail) and
+    a fractional one would round, so both are refused up front."""
+    from configurable_etl_python_repo_spark.llm.dedup import (
+        dedup_substrings,
+    )
+
+    df = spark.createDataFrame(
+        [(1, "a b c"), (2, "a b c")], ["doc_id", "text"]
+    ).withColumn("doc_id", F.col("doc_id").cast(id_type))
+    with pytest.raises(ValueError, match="integral id_col"):
+        dedup_substrings(df, k=2)
 
 
 def _ppl_scored(spark, n=300, strata=("en", "de", "fr")):

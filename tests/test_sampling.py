@@ -335,6 +335,25 @@ def test_dsir_validation(spark):
         dsir_select(docs, docs, k=0).collect()
 
 
+def test_dsir_refuses_buckets_above_broadcast_bound(spark):
+    """dsir_weights force-broadcasts its <= buckets-row lambda table, so
+    `buckets` is capped by a documented constant."""
+    import pytest
+
+    from configurable_etl_python_repo_spark.llm.sampling import (
+        DSIR_MAX_BUCKETS,
+        dsir_select,
+        dsir_weights,
+    )
+
+    docs = _dsir_docs(spark)
+    dsir_weights(docs, docs, buckets=DSIR_MAX_BUCKETS)  # the bound itself
+    with pytest.raises(ValueError, match=str(DSIR_MAX_BUCKETS)):
+        dsir_weights(docs, docs, buckets=DSIR_MAX_BUCKETS + 1)
+    with pytest.raises(ValueError, match=str(DSIR_MAX_BUCKETS)):
+        dsir_select(docs, docs, k=5, buckets=DSIR_MAX_BUCKETS + 1)
+
+
 def test_mixture_upsample_epochs_and_cap(spark):
     """Full copies are exact (floor(q/n) whole passes of every row),
     the remainder is a deterministic md5 subset at the next epoch, the

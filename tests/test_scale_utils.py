@@ -289,6 +289,9 @@ def test_registry_bindings_sql_addressable(spark, sf_dir):
 
     eng = Engine(spark)
     eng.run_scan(ScanSpec("li_view", "parquet", f"{sf_dir}/lineitem.parquet"))
+    # bindings are mirrored on demand (the SQL op does it before every
+    # statement); outside an op, register_views does the same
+    eng.registry.register_views()
     got = spark.sql(
         "SELECT l_returnflag, count(*) AS n FROM li_view GROUP BY 1"
     ).count()
