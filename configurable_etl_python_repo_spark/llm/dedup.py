@@ -1098,7 +1098,6 @@ def decontaminate(
     eval_text_col: str = "text",
     n: int = 13,
     mode: str = "flag",
-    broadcast_eval: bool = True,
 ) -> DataFrame:
     """Train/test contamination check: flag (or drop) corpus documents
     sharing ANY word n-gram with the evaluation set — the GPT-3/PaLM
@@ -1110,8 +1109,7 @@ def decontaminate(
     DISTINCT n-grams that appear anywhere in the eval set);
     mode="drop" returns only clean rows, un-annotated.
 
-    Plan shape: the eval side shingles on the codegen posexplode+LEAD
-    path and its DISTINCT gram set is (by default) collected and
+    Plan shape: the eval side's DISTINCT gram set is collected and
     broadcast — benchmarks are small next to a training corpus, the
     exact assumption the old BroadcastHashJoin probe already made. The
     CORPUS side (r14) never explodes grams at all: tokenization stays a
@@ -1124,102 +1122,76 @@ def decontaminate(
     shingle-window exchange AND the per-gram row explosion (the corpus
     ships one words-array row per doc into the scorer, matched counts
     come back one row per contaminated doc): d9 2.1s -> 0.75s at
-    sf0.1, and the probe is map-side at any scale. Set
-    broadcast_eval=False for an unusually large eval set: the probe
-    falls back to the exploded shuffle join of grams (unchanged from
-    r4).
+    sf0.1, and the probe is map-side at any scale. An eval set too
+    large to hold driver-side goes to decontaminate_bloom instead (the
+    DECONTAMINATE BLOOM op): a bounded bloom prefilter plus an exact
+    join of the survivors.
     """
     if mode not in ("flag", "drop"):
         raise ValueError(f"mode must be 'flag' or 'drop', got {mode!r}")
-    if broadcast_eval:
-        import pandas as pd
 
-        spark = corpus.sparkSession
-        # eval grams assembled map-side too (same Python concatenation
-        # as the probe, so both sides build byte-identical gram
-        # strings); per-row processing needs no synthetic doc id and
-        # cannot interleave duplicate texts, and the only exchange left
-        # on the eval side is the distinct over the gram strings
-        ev_words = evalset.select(
-            _words(F.col(eval_text_col)).alias("__w")
-        )
+    import pandas as pd
 
-        def ev_grams(batches):
-            for pdf in batches:
-                out: "set[str]" = set()
-                for ws in pdf["__w"]:
-                    if ws is None or len(ws) < n:
-                        continue
-                    out.update(
-                        " ".join(ws[i:i + n])
-                        for i in range(len(ws) - n + 1)
-                    )
-                yield pd.DataFrame({"sh": sorted(out)})
+    spark = corpus.sparkSession
+    # eval grams assembled map-side too (same Python concatenation
+    # as the probe, so both sides build byte-identical gram
+    # strings); per-row processing needs no synthetic doc id and
+    # cannot interleave duplicate texts, and the only exchange left
+    # on the eval side is the distinct over the gram strings
+    ev_words = evalset.select(
+        _words(F.col(eval_text_col)).alias("__w")
+    )
 
-        eval_grams = ev_words.mapInPandas(
-            ev_grams, "sh string"
-        ).distinct()
-        # the driver holds the distinct eval gram set — the same
-        # driver/executor footprint the broadcast relation already had
-        gset = {r[0] for r in eval_grams.collect()}
-        bset = spark.sparkContext.broadcast(gset)
-        id_t = corpus.schema[id_col].dataType.simpleString()
-        words_df = corpus.select(
-            F.col(id_col).alias("__id"),
-            _words(F.col(text_col)).alias("__w"),
-        )
-
-        def probe(batches):
-            s = bset.value
-            for pdf in batches:
-                ids, cnts = [], []
-                for id_, ws in zip(pdf["__id"], pdf["__w"]):
-                    if ws is None or len(ws) < n:
-                        continue
-                    # distinct matched grams only — identical count to
-                    # the exploded distinct-join (a doc gram hits the
-                    # eval set once no matter how often it repeats)
-                    matched = {
-                        g
-                        for i in range(len(ws) - n + 1)
-                        if (g := " ".join(ws[i:i + n])) in s
-                    }
-                    if matched:
-                        ids.append(id_)
-                        cnts.append(len(matched))
-                yield pd.DataFrame(
-                    {"__id": ids, "n_contaminated_grams": cnts}
+    def ev_grams(batches):
+        for pdf in batches:
+            out: "set[str]" = set()
+            for ws in pdf["__w"]:
+                if ws is None or len(ws) < n:
+                    continue
+                out.update(
+                    " ".join(ws[i:i + n])
+                    for i in range(len(ws) - n + 1)
                 )
+            yield pd.DataFrame({"sh": sorted(out)})
 
-        hits = words_df.mapInPandas(
-            probe, f"__id {id_t}, n_contaminated_grams long"
-        ).withColumnRenamed("__id", id_col)
-    else:
-        # shuffle-join fallback for eval sets too big to hold driver-
-        # side: both sides on the r4 exploded-gram machinery. The
-        # shingle window partitions by doc id, so eval rows need
-        # DISTINCT ids or LEADs cross document boundaries; a content
-        # hash is safe (two identical eval texts merge into one
-        # partition with identical grams) where
-        # monotonically_increasing_id next to the generator would not
-        eval_grams = (
-            doc_shingles(
-                evalset.select(
-                    F.xxhash64(F.col(eval_text_col)).alias("__eid"),
-                    F.col(eval_text_col),
-                ).distinct(),
-                id_col="__eid", text_col=eval_text_col, n=n,
+    eval_grams = ev_words.mapInPandas(
+        ev_grams, "sh string"
+    ).distinct()
+    # the driver holds the distinct eval gram set — the same
+    # driver/executor footprint the broadcast relation already had
+    gset = {r[0] for r in eval_grams.collect()}
+    bset = spark.sparkContext.broadcast(gset)
+    id_t = corpus.schema[id_col].dataType.simpleString()
+    words_df = corpus.select(
+        F.col(id_col).alias("__id"),
+        _words(F.col(text_col)).alias("__w"),
+    )
+
+    def probe(batches):
+        s = bset.value
+        for pdf in batches:
+            ids, cnts = [], []
+            for id_, ws in zip(pdf["__id"], pdf["__w"]):
+                if ws is None or len(ws) < n:
+                    continue
+                # distinct matched grams only — identical count to
+                # the exploded distinct-join (a doc gram hits the
+                # eval set once no matter how often it repeats)
+                matched = {
+                    g
+                    for i in range(len(ws) - n + 1)
+                    if (g := " ".join(ws[i:i + n])) in s
+                }
+                if matched:
+                    ids.append(id_)
+                    cnts.append(len(matched))
+            yield pd.DataFrame(
+                {"__id": ids, "n_contaminated_grams": cnts}
             )
-            .select("sh")
-            .distinct()
-        )
-        hits = (
-            doc_shingles(corpus, id_col=id_col, text_col=text_col, n=n)
-            .join(eval_grams, on="sh")
-            .groupBy("id")
-            .agg(F.count(F.lit(1)).alias("n_contaminated_grams"))
-            .withColumnRenamed("id", id_col)
-        )
+
+    hits = words_df.mapInPandas(
+        probe, f"__id {id_t}, n_contaminated_grams long"
+    ).withColumnRenamed("__id", id_col)
     # hits is NOT force-broadcast: it is usually tiny, but a pervasively
     # contaminated corpus makes it corpus-sized — AQE picks the strategy
     out = (

@@ -2136,7 +2136,7 @@ def semantic_dedup(
         )
     # mean_digits follows round_digits so the clustering rounding agrees
     # with the assignment/sim rounding end-to-end (the SQL-replay
-    # contract); semantic_dedup_table already forwards it the same way
+    # contract)
     cents = lloyd_centroids(df, n_centroids, n_iter, id_col, vec_col,
                             mean_digits=round_digits)
     assign1 = ivf_assignments_arrow(cents, n_best=1, digits=round_digits)
@@ -2175,204 +2175,6 @@ def semantic_dedup(
         .where(F.col("sim") >= threshold)
     )
     wit = pairs.groupBy("id_b").agg(F.min("id_a").alias("dup_of"))
-    return (
-        a.select("id", "cid")
-        .join(wit, F.col("id") == F.col("id_b"), "left")
-        .select(
-            F.col("id").alias(id_col),
-            "cid",
-            "dup_of",
-            F.col("dup_of").isNull().alias("kept"),
-        )
-    )
-
-
-def _argbest_assign(
-    scored: DataFrame, id_out: str, round_digits: int
-) -> DataFrame:
-    """(id -> best cid) from a scored candidate relation (id, cid, sim):
-    highest sim wins, ties to the SMALLER cid — the same contract
-    ivf_assignments_arrow enforces, expressed as a map-side-combinable
-    min(struct(-sim, cid)) aggregate (no window; a huge cell never sorts
-    on one reducer)."""
-    return (
-        scored.groupBy("id")
-        .agg(F.min(F.struct((-F.col("sim")).alias("ns"),
-                            F.col("cid").alias("cid"))).alias("__b"))
-        .select(F.col("id").alias(id_out), F.col("__b.cid").alias("cid"))
-    )
-
-
-def lloyd_centroids_table(
-    corpus: DataFrame,
-    n_centroids: int,
-    n_iter: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    coarse_centroids: int = 256,
-    n_probe_coarse: int = 4,
-    mean_digits: int = 6,
-) -> DataFrame:
-    """Lloyd k-means with the centroid table as a DATAFRAME — the
-    million-cluster regime where `lloyd_centroids`' driver-side list
-    (and the Arrow closure shipping it to every task) stops scaling.
-    Nothing here collects the fine centroids:
-
-      - init: the hash-order sample as a TakeOrdered LIMIT (a relation,
-        not a collect);
-      - assignment: two-level — a BOUNDED coarse quantizer
-        (`coarse_centroids` driver-side, the existing Arrow path)
-        buckets both corpus vectors (their n_probe_coarse nearest cells)
-        and fine centroids (their single cell); fine scoring is then an
-        equi-join WITHIN coarse cells, O(N x C/coarse x probe) instead
-        of O(N x C); argbest is a partial-combining aggregate;
-      - update: per-cluster decimal-exact means as a groupBy — the same
-        every-float-hazard-pinned math lloyd_centroids uses, producing
-        the next centroid DataFrame; empty clusters keep their previous
-        centroid; eager localCheckpoint truncates per-iteration lineage
-        (the connected-components precedent).
-
-    With n_probe_coarse >= coarse_centroids the assignment is
-    EXHAUSTIVE and this path reproduces lloyd_centroids exactly
-    (pytest-pinned); smaller probes trade exactness for the scale
-    win, IVF-style. Returns (centroids_df(cid, cv),
-    final_assignment_df(id, cid))."""
-    head = corpus.select(vec_col).first()
-    if head is None:
-        raise ValueError("no centroids: corpus is empty")
-    dim = len(head[0])
-    cents = (
-        corpus.orderBy(F.md5(F.col(id_col).cast("string")))
-        .limit(n_centroids)
-        .select(
-            F.col(id_col).alias("cid"),
-            F.transform(F.col(vec_col),
-                        lambda x: x.cast("double")).alias("cv"),
-        )
-        .localCheckpoint(eager=True)
-    )
-    coarse = _hash_order_sample(corpus, min(coarse_centroids, n_centroids),
-                                id_col, vec_col)
-    probe_corpus = ivf_assignments_arrow(
-        coarse, n_best=min(n_probe_coarse, len(coarse)), digits=mean_digits
-    )
-    assign_cent = ivf_assignments_arrow(coarse, n_best=1, digits=mean_digits)
-
-    body = corpus.select(
-        F.col(id_col).alias("id"), F.col(vec_col).alias("v"),
-        F.explode(probe_corpus(F.col(vec_col))).alias("ccid"),
-    )
-    for it in range(n_iter + 1):
-        tagged = cents.withColumn(
-            "ccid", assign_cent(F.col("cv"))[0]
-        )
-        scored = (
-            body.join(tagged, on="ccid")
-            .withColumn(
-                "sim",
-                _sim(F.col("v"), F.col("cv"),
-                     _norm(F.col("v")), _norm(F.col("cv")), mean_digits),
-            )
-            .select("id", "cid", "sim")
-        )
-        assign = _argbest_assign(scored, "id", mean_digits)
-        if it == n_iter:
-            # the (n_iter+1)-th pass is the FINAL assignment — stop
-            # before computing another mean update
-            break
-        # NARROW mean update (the lloyd_centroids fix applied to the
-        # table path): posexplode to (cid, j, x), aggregate per element
-        # index — one round/DECIMAL-sum/divide expression instead of
-        # 2·dim Column trees per iteration (measured 4-5s of pure
-        # driver-side plan construction at dim=64) — then re-assemble
-        # the mean array in element order. Value-for-value identical:
-        # the per-(cid,j) count equals the cluster size, the DECIMAL
-        # sum is order-independent over the same addend set, and
-        # array_sort on (j, m) structs with unique j is a total order.
-        means = (
-            assign.join(
-                corpus.select(F.col(id_col).alias("id"),
-                              F.col(vec_col).alias("__v")), on="id")
-            .select("cid", F.posexplode("__v").alias("__j", "__x"))
-            .groupBy("cid", "__j")
-            .agg(
-                F.count(F.lit(1)).alias("__n"),
-                F.sum(
-                    _round_away_col(F.col("__x").cast("double"),
-                                    mean_digits)
-                    .cast("decimal(28,10)")
-                ).alias("__s"),
-            )
-            .select(
-                "cid", "__j",
-                _round_away_col(
-                    F.col("__s").cast("double") / F.col("__n"),
-                    mean_digits,
-                ).alias("__m"),
-            )
-            .groupBy("cid")
-            .agg(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("__j", "__m"))),
-                    lambda s: s["__m"],
-                ).alias("__cv2"),
-            )
-        )
-        cents = (
-            cents.join(means, on="cid", how="left")
-            .select(
-                "cid",
-                F.coalesce(F.col("__cv2"), F.col("cv")).alias("cv"),
-            )
-            .localCheckpoint(eager=True)
-        )
-    return cents, assign
-
-
-def semantic_dedup_table(
-    df: DataFrame,
-    threshold: float,
-    n_centroids: int,
-    n_iter: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    round_digits: int = 6,
-    coarse_centroids: int = 256,
-    n_probe_coarse: int = 4,
-) -> DataFrame:
-    """semantic_dedup for the regime past the driver-side centroid cap:
-    clustering via lloyd_centroids_table (centroids stay a DataFrame,
-    two-level assignment), then the identical within-cluster keep-first
-    pairwise. Same output schema as semantic_dedup; with
-    n_probe_coarse >= coarse_centroids it reproduces the driver path
-    exactly (pytest-pinned)."""
-    _, assign = lloyd_centroids_table(
-        df, n_centroids, n_iter, id_col, vec_col,
-        coarse_centroids, n_probe_coarse, round_digits,
-    )
-    a = _with_norm(
-        df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
-        .join(assign, on="id"),
-        "v", "nv",
-    )
-    from .dedup import _scope_cache
-
-    a = _scope_cache(a)
-    b = a.select(
-        F.col("id").alias("id_b"), F.col("v").alias("vb"),
-        F.col("nv").alias("nb"), "cid",
-    )
-    pairs = (
-        a.join(b, "cid")
-        .where(F.col("id") < F.col("id_b"))
-        .withColumn(
-            "sim",
-            _sim(F.col("v"), F.col("vb"), F.col("nv"), F.col("nb"),
-                 round_digits),
-        )
-        .where(F.col("sim") >= threshold)
-    )
-    wit = pairs.groupBy("id_b").agg(F.min("id").alias("dup_of"))
     return (
         a.select("id", "cid")
         .join(wit, F.col("id") == F.col("id_b"), "left")

@@ -40,18 +40,6 @@ def _unary(fn, **defaults):
     return compile_op
 
 
-def _ann_topk(engine: "Engine", spec: OpSpec):
-    corpus, _ = engine.peek(spec.inputs[0])
-    queries, _ = engine.peek(spec.inputs[1] if len(spec.inputs) > 1 else spec.inputs[0])
-    return S.brute_force_topk(corpus, queries, **spec.args), None
-
-
-def _ann_topk_lsh(engine: "Engine", spec: OpSpec):
-    corpus, _ = engine.peek(spec.inputs[0])
-    queries, _ = engine.peek(spec.inputs[1] if len(spec.inputs) > 1 else spec.inputs[0])
-    return S.lsh_bucketed_topk(corpus, queries, **spec.args), None
-
-
 def _binary_corpus_queries(fn_name: str):
     def compile_op(engine: "Engine", spec: OpSpec):
         corpus, _ = engine.peek(spec.inputs[0])
@@ -107,17 +95,23 @@ def _connected_components(engine: "Engine", spec: OpSpec):
     return C.connected_components(pairs, **spec.args), None
 
 
-def _decontaminate(engine: "Engine", spec: OpSpec):
+def _decontaminate(fn):
     """inputs: [corpus, evalset] — flag/drop corpus docs sharing any word
-    n-gram with the eval set (llm.dedup.decontaminate)."""
-    corpus, _ = engine.peek(spec.inputs[0])
-    evalset, _ = engine.peek(spec.inputs[1])
-    kwargs = dict(spec.args)
-    renames = {**_ID_TEXT, "eval_text_column": "eval_text_col"}
-    for cfg_name, py_name in renames.items():
-        if cfg_name in kwargs:
-            kwargs[py_name] = kwargs.pop(cfg_name)
-    return D.decontaminate(corpus, evalset, **kwargs), None
+    n-gram with the eval set: llm.dedup.decontaminate (broadcast gram
+    set) or decontaminate_bloom (bloom prefilter + exact verify, for
+    eval sets too big to broadcast; bit-identical results)."""
+
+    def compile_op(engine: "Engine", spec: OpSpec):
+        corpus, _ = engine.peek(spec.inputs[0])
+        evalset, _ = engine.peek(spec.inputs[1])
+        kwargs = dict(spec.args)
+        renames = {**_ID_TEXT, "eval_text_column": "eval_text_col"}
+        for cfg_name, py_name in renames.items():
+            if cfg_name in kwargs:
+                kwargs[py_name] = kwargs.pop(cfg_name)
+        return fn(corpus, evalset, **kwargs), None
+
+    return compile_op
 
 
 def _validate_op_args(
@@ -191,20 +185,6 @@ def _pq_search_index(engine: "Engine", spec: OpSpec):
     return S.pq_search_index(
         queries.sparkSession, path, queries, **kwargs
     ), None
-
-
-def _decontaminate_bloom(engine: "Engine", spec: OpSpec):
-    """inputs: [corpus, evalset] — decontaminate via the Bloom-filter
-    prefilter + exact verify (llm.dedup.decontaminate_bloom):
-    bit-identical results, broadcast-scale eval sets."""
-    corpus, _ = engine.peek(spec.inputs[0])
-    evalset, _ = engine.peek(spec.inputs[1])
-    kwargs = dict(spec.args)
-    renames = {**_ID_TEXT, "eval_text_column": "eval_text_col"}
-    for cfg_name, py_name in renames.items():
-        if cfg_name in kwargs:
-            kwargs[py_name] = kwargs.pop(cfg_name)
-    return D.decontaminate_bloom(corpus, evalset, **kwargs), None
 
 
 def _dedup_clusters(engine: "Engine", spec: OpSpec):
@@ -911,8 +891,8 @@ LLM_OP_COMPILERS = {
     "PERPLEXITY PARTITION STREAM": _ppl_partition_stream,
     "CONNECTED COMPONENTS": _connected_components,
     "DEDUP CLUSTERS": _dedup_clusters,
-    "DECONTAMINATE": _decontaminate,
-    "DECONTAMINATE BLOOM": _decontaminate_bloom,
+    "DECONTAMINATE": _decontaminate(D.decontaminate),
+    "DECONTAMINATE BLOOM": _decontaminate(D.decontaminate_bloom),
     "DECONTAMINATE STREAM": _decontaminate_stream,
     "SURPRISAL SCORE STREAM": _surprisal_stream,
     "SURPRISAL BACKOFF STREAM": _backoff_stream,
@@ -920,9 +900,9 @@ LLM_OP_COMPILERS = {
         _rename_kw(S.semantic_dedup,
                    {"id_column": "id_col", "vector_column": "vec_col"})
     ),
-    "ANN TOPK": _ann_topk,
+    "ANN TOPK": _binary_corpus_queries("brute_force_topk"),
     "MAXSIM TOPK": _binary_corpus_queries("maxsim_topk"),
-    "ANN TOPK LSH": _ann_topk_lsh,
+    "ANN TOPK LSH": _binary_corpus_queries("lsh_bucketed_topk"),
     "ANN TOPK IVF": _binary_corpus_queries("ivf_topk"),
     "ANN TOPK IVF KMEANS": _binary_corpus_queries("ivf_topk_kmeans"),
     "ANN TOPK PQ": _binary_corpus_queries("pq_topk"),

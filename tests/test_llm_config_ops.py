@@ -74,6 +74,29 @@ def test_ann_topk_two_input_op(spark, sf_dir):
     assert out.count() == 6
 
 
+def test_ann_topk_ops_match_direct_calls(spark, sf_dir):
+    """ANN TOPK with a single input (corpus queries itself) and ANN TOPK
+    LSH return exactly the rows of brute_force_topk / lsh_bucketed_topk
+    called directly."""
+    from configurable_etl_python_repo_spark.llm.similarity import (
+        brute_force_topk, lsh_bucketed_topk,
+    )
+
+    eng = Engine(spark)
+    eng.run_scan(ScanSpec("corpus", "parquet", f"{sf_dir}/embeddings.parquet"))
+    emb = eng.peek("corpus")[0].where(F.col("vec_id") < 60)
+    eng.bind("small", emb)
+    dim = len(emb.first()["embedding"])
+    brute = eng.run_op(OpSpec("ANN TOPK", "nn", ["small"], {"k": 3}))
+    assert sorted(brute.collect()) == sorted(
+        brute_force_topk(emb, emb, k=3).collect())
+    lsh = eng.run_op(OpSpec(
+        "ANN TOPK LSH", "nn", ["small", "small"],
+        {"dim": dim, "k": 3, "planes": 4, "tables": 2}))
+    assert sorted(lsh.collect()) == sorted(
+        lsh_bucketed_topk(emb, emb, dim, k=3, planes=4, tables=2).collect())
+
+
 def test_write_kv_batched(spark, tmp_path):
     out_dir = str(tmp_path / "kv")
     df = spark.range(103).selectExpr("id", "concat('u', id) AS name").repartition(4)

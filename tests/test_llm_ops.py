@@ -777,98 +777,27 @@ def test_semantic_dedup_auto_centroids_scale_policy(spark, sf_dir):
     assert capped.select("cid").distinct().count() <= 4
 
 
-def test_semantic_dedup_table_reproduces_driver_path_exhaustively(
-    spark, sf_dir
-):
-    """The table-centroid path (centroids as a DataFrame, two-level
-    assignment, NO driver-side centroid collect) with exhaustive coarse
-    probing reproduces semantic_dedup row-for-row — the million-cluster
-    regime runs the same math."""
-    from configurable_etl_python_repo_spark.llm.similarity import (
-        semantic_dedup, semantic_dedup_table,
-    )
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    key = lambda r: (r["vec_id"], r["cid"], r["dup_of"], r["kept"])
-    drv = {key(r) for r in semantic_dedup(
-        emb, threshold=0.4, n_centroids=6, n_iter=2).collect()}
-    tbl = {key(r) for r in semantic_dedup_table(
-        emb, threshold=0.4, n_centroids=6, n_iter=2,
-        coarse_centroids=4, n_probe_coarse=4).collect()}
-    assert tbl == drv
-
-    # probed mode stays complete (every vector classified) and close:
-    # coarse pruning may flip borderline assignments, never drop rows
-    probed = semantic_dedup_table(
-        emb, threshold=0.4, n_centroids=6, n_iter=2,
-        coarse_centroids=4, n_probe_coarse=1)
-    rows = probed.collect()
-    assert len(rows) == emb.count()
-    kept_exact = sum(1 for r in drv if r[3])
-    kept_probed = sum(1 for r in rows if r["kept"])
-    assert abs(kept_probed - kept_exact) <= 0.2 * len(rows)
-
-
 def test_semantic_dedup_round_digits_forwarded_to_clustering(spark, sf_dir):
     """With a NON-default round_digits the whole pipeline — Lloyd means
     included — must round consistently: semantic_dedup passes it through
-    as lloyd_centroids' mean_digits exactly like semantic_dedup_table
-    does, so driver path == table path holds at any precision (the
-    documented end-to-end determinism/SQL-replay contract)."""
+    as lloyd_centroids' mean_digits, so its clusters are exactly those of
+    lloyd_centroids(mean_digits=3) + the digits=3 quantizer (the
+    documented end-to-end determinism/SQL-replay contract). On the
+    fixture, 6-digit means move some vectors to another cluster."""
     from configurable_etl_python_repo_spark.llm.similarity import (
-        semantic_dedup, semantic_dedup_table,
+        ivf_assignments_arrow, lloyd_centroids, semantic_dedup,
     )
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    key = lambda r: (r["vec_id"], r["cid"], r["dup_of"], r["kept"])
-    drv = {key(r) for r in semantic_dedup(
+    assign = ivf_assignments_arrow(
+        lloyd_centroids(emb, 6, 2, mean_digits=3), n_best=1, digits=3
+    )
+    want = {r[0]: r[1] for r in emb.select(
+        "vec_id", assign(F.col("embedding"))[0]).collect()}
+    got = {r["vec_id"]: r["cid"] for r in semantic_dedup(
         emb, threshold=0.4, n_centroids=6, n_iter=2,
         round_digits=3).collect()}
-    tbl = {key(r) for r in semantic_dedup_table(
-        emb, threshold=0.4, n_centroids=6, n_iter=2,
-        coarse_centroids=4, n_probe_coarse=4, round_digits=3).collect()}
-    assert tbl == drv
-
-
-def test_semantic_dedup_table_probing_accurate_on_clustered_vectors(spark):
-    """The probe-vs-exhaustive gap measured on the fixture comes from its
-    near-orthogonal embeddings (every cell boundary is ambiguous); on
-    CLUSTERED vectors — the regime SemDeDup exists for — single-probe
-    assignment agrees with exhaustive almost everywhere. Deterministic
-    synthetic clusters: 8 centers on distinct axes, members = center +
-    small hash-derived offsets."""
-    import hashlib
-
-    from configurable_etl_python_repo_spark.llm.similarity import (
-        semantic_dedup_table,
-    )
-
-    dim, n_centers, per = 16, 8, 40
-
-    def member(center, j):
-        v = [0.0] * dim
-        v[center * 2] = 1.0
-        for d in range(dim):
-            h = int(hashlib.md5(f"{center}|{j}|{d}".encode())
-                    .hexdigest()[:4], 16)
-            v[d] += (h / 65535.0 - 0.5) * 0.08  # small jitter
-        return v
-
-    rows = [(center * per + j, member(center, j))
-            for center in range(n_centers) for j in range(per)]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    # compare the DEDUP DECISION, not the cluster label: with more fine
-    # centroids than true clusters, which same-cluster centroid a
-    # vector lands in is genuinely ambiguous and probe-dependent — the
-    # kept/dropped outcome is the operator's contract
-    exact = {r["vec_id"]: r["kept"] for r in semantic_dedup_table(
-        df, threshold=0.98, n_centroids=16, n_iter=2,
-        coarse_centroids=8, n_probe_coarse=8).collect()}
-    probed = {r["vec_id"]: r["kept"] for r in semantic_dedup_table(
-        df, threshold=0.98, n_centroids=16, n_iter=2,
-        coarse_centroids=8, n_probe_coarse=1).collect()}
-    agreement = sum(1 for k in exact if exact[k] == probed[k]) / len(exact)
-    assert agreement >= 0.95, agreement
+    assert got == want
 
 
 def test_simhash_pairs_matches_brute_force(spark, sf_dir):
