@@ -61,11 +61,6 @@ def analyte_from_json(path: str) -> AnalytePlan:
         return analyte_from_dict(json.load(f))
 
 
-def study_from_json(path: str) -> StudyPlan:
-    with open(path) as f:
-        return study_from_dict(json.load(f))
-
-
 def analyte_from_yaml(path: str) -> AnalytePlan:
     """YAML variant — gated on PyYAML being importable."""
     try:

@@ -5,14 +5,16 @@ protocol that makes build/extend/compact ATOMIC. ONE definition on
 purpose — a load-bearing guard duplicated per store could drift (one
 copy gaining a check the others miss).
 
-Durability contract, stated once for every store (the txlog
-manifest-create-IS-commit protocol, sinks/txlog.py, applied to the
-index families):
+Durability contract, stated once for every store. The commit chain
+itself (version names, the LATEST resolver, the put_if_absent publish,
+marker pruning) is the one in sinks/logstore.py that the gold txlog
+also uses; this module adds the segment payloads on top:
 
   <path>/
     _segments/v{N}.json  immutable manifests: committed segment ids
                          (+ extend tags, + the _meta generation id)
-    _segments/LATEST     best-effort pointer hint (probed forward)
+    _segments/LATEST     best-effort pointer hint (probed forward;
+                         a lost one recovers by listing the log)
     <rel>/seg=<id>/...   each relation's data, one directory per
                          committed segment, sub-partitioned by the
                          store's own key (kb/ab/cid/tb)
@@ -56,8 +58,8 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..sinks.logstore import LocalLogStore, LogStore
-from ..sinks.txlog import ConcurrentWriteError
+from ..sinks import logstore
+from ..sinks.logstore import ConcurrentWriteError, LocalLogStore, LogStore
 
 #: bounded optimistic-retry budget for manifest commits: each loss to a
 #: concurrent writer re-reads the new snapshot and re-publishes (the
@@ -181,63 +183,6 @@ def _seg_store(path: str, store: LogStore | None = None) -> LogStore:
     )
 
 
-def _mname(version: int) -> str:
-    return f"v{version:08d}.json"
-
-
-def _listed_versions(st: LogStore) -> "list[int]":
-    """Every committed manifest version the store can LIST — the
-    recovery primitive (rare path), not the hot path."""
-    out: "list[int]" = []
-    for n in st.list_names():
-        if n.startswith("v") and n.endswith(".json"):
-            try:
-                out.append(int(n[1:-5]))
-            except ValueError:
-                continue
-    return out
-
-
-def _latest_version(st: LogStore) -> int:
-    """True current version: the LATEST hint probed FORWARD (a crash
-    between manifest-create and hint-update leaves the hint behind by a
-    bounded number of commits — O(drift) exists() calls, the hot path).
-    A torn, dangling, or garbled hint falls back to LISTING the
-    manifest log and taking the max — the Delta checkpoint-then-list
-    design — then repairs the hint so the next read is O(1) again.
-    Manifest retention never deletes a version's NAME (pruning
-    overwrites the content with a tiny marker), so the forward probe
-    climbs straight through pruned versions, a returned version > 0
-    always has an existing manifest, and a stale writer can never win
-    put_if_absent on a recycled low slot (no slot is ever recycled —
-    the fork-proofing the commit protocol rests on)."""
-    hint = st.read("LATEST")
-    try:
-        start = int(hint.decode().strip()) if hint is not None else 0
-    except ValueError:
-        start = 0
-    if start < 0:
-        start = 0
-    version = start
-    while st.exists(_mname(version + 1)):
-        version += 1
-    fell_back = version == 0 or not st.exists(_mname(version))
-    if fell_back:
-        version = max(_listed_versions(st), default=0)
-    if version > 0 and (start == 0 or fell_back):
-        try:
-            # best-effort hint repair, mirroring _publish: a LOST or
-            # garbled hint otherwise makes every read re-walk the
-            # whole chain (climb from v0 through years of marker
-            # names) or re-LIST the log until the next commit happens
-            # to rewrite it. Best-effort for real (pure readers may
-            # lack write permission)
-            st.write("LATEST", str(version).encode())
-        except Exception:
-            pass
-    return version
-
-
 def read_manifest(
     path: str, store: LogStore | None = None,
     version: "int | None" = None,
@@ -252,11 +197,11 @@ def read_manifest(
     dirs without probing any filesystem)."""
     st = _seg_store(path, store)
     if version is None:
-        version = _latest_version(st)
+        version = logstore.latest_version(st)
         if version == 0:
             return 0, {"segments": [], "tags": {}, "meta_id": None,
                        "tombstones": []}
-        raw = st.read(_mname(version))
+        raw = st.read(logstore.manifest_name(version))
         if raw is None:
             # manifest NAMES are never deleted (pruning overwrites
             # content with a marker), so a vanished newest means the
@@ -273,9 +218,9 @@ def read_manifest(
                 f"snapshot versions start at 1 (got {version}); the "
                 f"first committed build publishes v1"
             )
-        raw = st.read(_mname(version))
+        raw = st.read(logstore.manifest_name(version))
         if raw is None:
-            if version < _latest_version(st):
+            if version < logstore.latest_version(st):
                 raise ValueError(
                     f"manifest v{version} of the index at {path} was "
                     f"pruned by vacuum's manifest retention "
@@ -353,18 +298,6 @@ def committed_state(
     return meta, data_segs, dict(man.get("tags") or {}), man
 
 
-def _publish(st: LogStore, base: int, payload: dict) -> int:
-    data = json.dumps(payload).encode()
-    if not st.put_if_absent(_mname(base + 1), data):
-        raise ConcurrentWriteError(
-            f"concurrent writer already published v{base + 1}"
-        )
-    # best-effort hint AFTER the commit (failure loses nothing: readers
-    # probe forward)
-    st.write("LATEST", str(base + 1).encode())
-    return base + 1
-
-
 def commit_build(
     path: str, seg: str, meta_id: str, store: LogStore | None = None,
     row_count: "int | None" = None,
@@ -381,9 +314,9 @@ def commit_build(
     from the map (readers fall back to counting them)."""
     st = _seg_store(path, store)
     for _ in range(_MAX_COMMIT_RETRIES):
-        version = _latest_version(st)
+        version = logstore.latest_version(st)
         try:
-            return _publish(st, version, {
+            return logstore.publish(st, version, {
                 "version": version + 1,
                 "segments": [seg],
                 "tags": {},
@@ -440,7 +373,7 @@ def commit_extend(
         if row_count is not None:
             rows[seg] = int(row_count)
         try:
-            _publish(st, version, {
+            logstore.publish(st, version, {
                 "version": version + 1,
                 "segments": man["segments"] + [seg],
                 "tags": tags,
@@ -515,7 +448,7 @@ def commit_replace(
         # rows, so its count is unknown here — readers count it once
         # (one segment, exactly when listing is cheapest)
         try:
-            return _publish(st, version, {
+            return logstore.publish(st, version, {
                 "version": version + 1,
                 "segments": [new_seg] + kept + snapshot_tombstones,
                 "tags": dict(man.get("tags") or {}),
@@ -932,27 +865,12 @@ def vacuum_index(
                 f"manifest is never pruned); got {manifest_keep_last}"
             )
         st = _seg_store(path, store)
-        cutoff = version - int(manifest_keep_last) + 1
-        # prune = OVERWRITE the manifest with a ~20-byte marker, never
-        # delete the name: a deleted name's put_if_absent slot becomes
-        # winnable again, and a writer whose resolved snapshot went
-        # stale across the pruned range could fork the log by
-        # committing into it (silent lost extend + corrupted as-of
-        # history). Occupied-forever names keep the commit protocol's
-        # version-uniqueness absolute; what retention bounds is the
-        # manifest PAYLOAD (segments/tags lists that grow with the
-        # store), which is the actual metadata-growth term. Marker
-        # writes are idempotent, so concurrent or crashed-and-retried
-        # vacuums are safe; only newly pruned versions are reported
-        # (by bare NAME — manifests live in the LogStore, which need
-        # not be a local path; segment entries are dir paths).
-        marker = json.dumps({"pruned": True}).encode()
-        for v in sorted(x for x in _listed_versions(st) if x < cutoff):
-            raw = st.read(_mname(v))
-            if raw is None or raw == marker:
-                continue
-            st.write(_mname(v), marker)
-            removed.append(_mname(v))
+        # prune by marker overwrite, never by delete: the names stay
+        # taken, so a stale writer cannot fork the log
+        # (logstore.prune_manifests)
+        removed += logstore.prune_manifests(
+            st, version - int(manifest_keep_last) + 1
+        )
         # legacy cleanup: the short-lived FIRST floor hint (superseded
         # by list-based recovery) must not misstate the pruning floor
         # to older readers

@@ -88,14 +88,6 @@ def _ab_col(id_expr, buckets: int):
     return md5_mod(id_expr.cast("string"), buckets).alias("ab")
 
 
-def _read_meta(spark: SparkSession, path: str, expected_layout: str = None):
-    from ._store import read_meta
-
-    return read_meta(
-        spark, path, expected_layout or _LAYOUT, kind="signature index"
-    )
-
-
 def _committed(spark: SparkSession, path: str, layout: str = None,
                version: "int | None" = None):
     """(meta, committed segments, tags, manifest) with the layout +

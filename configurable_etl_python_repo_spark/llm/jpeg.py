@@ -64,6 +64,8 @@ import struct
 
 import numpy as np
 
+from .png import RawImage
+
 # ---------------------------------------------------------------- tables
 
 #: ITU T.81 Annex K base quantization tables (natural row-major order)
@@ -314,81 +316,13 @@ def _category(v: int) -> int:
 # -------------------------------------------------------------- image
 
 
-#: integer luminance shared with png.py (SQL-reproducible)
-def _luma_bytes(data: bytes, ch: int) -> bytes:
-    if ch == 1:
-        return data
-    return bytes(
-        (299 * data[i] + 587 * data[i + 1] + 114 * data[i + 2]) // 1000
-        for i in range(0, len(data), ch)
-    )
-
-
-class JpegImage:
-    """The PIL.Image-shaped object the multimodal seam consumes —
-    same facade contract as png.PngImage (.size / .format /
-    .convert("L") / .resize / .getdata / .save). Pixels are flat
-    row-major interleaved bytes, mode "L" or "RGB"."""
+class JpegImage(RawImage):
+    """A decoded baseline JPEG: modes L and RGB — the png.RawImage
+    facade (.size / .format / .convert("L") / .resize / .getdata) with
+    a JPEG .save."""
 
     format = "JPEG"
-
     _CH = {"L": 1, "RGB": 3}
-
-    def __init__(self, mode: str, size: "tuple[int, int]", data: bytes):
-        if mode not in self._CH:
-            raise ValueError(f"unsupported mode {mode!r}")
-        w, h = int(size[0]), int(size[1])
-        ch = self._CH[mode]
-        if len(data) != w * h * ch:
-            raise ValueError(
-                f"mode {mode} {w}x{h} needs {w * h * ch} bytes, got "
-                f"{len(data)}"
-            )
-        self.mode, self.size, self._data = mode, (w, h), bytes(data)
-
-    @property
-    def _channels(self) -> int:
-        return self._CH[self.mode]
-
-    def convert(self, mode: str) -> "JpegImage":
-        if mode == self.mode:
-            return self
-        if mode != "L":
-            raise NotImplementedError(
-                f"jpeg_stdlib converts only to 'L', not {mode!r}"
-            )
-        return JpegImage(
-            "L", self.size, _luma_bytes(self._data, self._channels)
-        )
-
-    def resize(self, size: "tuple[int, int]") -> "JpegImage":
-        """Deterministic nearest-neighbor (``src = dst * n // m``) —
-        the png.py convention, exactly reproducible in integer SQL."""
-        dw, dh = int(size[0]), int(size[1])
-        if dw < 1 or dh < 1:
-            raise ValueError(f"resize to {size} — both sides must be >= 1")
-        sw, sh = self.size
-        ch = self._channels
-        rows = []
-        for y in range(dh):
-            sy = y * sh // dh
-            row = self._data[sy * sw * ch : (sy + 1) * sw * ch]
-            rows.append(
-                b"".join(
-                    row[(x * sw // dw) * ch : (x * sw // dw) * ch + ch]
-                    for x in range(dw)
-                )
-            )
-        return JpegImage(self.mode, (dw, dh), b"".join(rows))
-
-    def getdata(self):
-        ch = self._channels
-        if ch == 1:
-            return list(self._data)
-        return [
-            tuple(self._data[i : i + ch])
-            for i in range(0, len(self._data), ch)
-        ]
 
     def save(self, fp, format: "str | None" = None, quality: int = 90) -> None:
         if format not in (None, "JPEG", "JPG"):

@@ -51,27 +51,6 @@ FEATURE_SCHEMA = T.StructType(
 )
 
 
-def attach_payload_meta(
-    df: DataFrame, payload_col: str = "payload", media_type: str = "image"
-) -> DataFrame:
-    """Typed metadata columns for an opaque binary payload — pure Column
-    ops (no decode): byte length + md5 content address."""
-    p = F.col(payload_col)
-    return df.withColumns(
-        {
-            "n_bytes": F.length(p).cast("long"),
-            "payload_md5": F.md5(p),
-            "media_meta": F.struct(
-                F.lit(media_type).alias("media_type"),
-                F.lit(None).cast("string").alias("format"),
-                F.lit(None).cast("int").alias("width"),
-                F.lit(None).cast("int").alias("height"),
-                F.lit(None).cast("long").alias("duration_ms"),
-            ),
-        }
-    )
-
-
 def _image_codec():
     """Import-try the real image codec. Returns PIL's Image module when
     Pillow is installed, else None (executors re-import per worker — the

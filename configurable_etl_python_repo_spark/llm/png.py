@@ -119,36 +119,39 @@ def _filter_row(line: bytes, prev: bytes, bpp: int, ftype: int) -> bytes:
     return bytes(out)
 
 
-class PngImage:
+class RawImage:
     """The PIL.Image-shaped object the multimodal seam consumes:
     .size / .format / .convert("L") / .resize((w, h)) / .getdata() /
-    .save(fp, format=...). Pixels are flat row-major interleaved
-    bytes."""
+    .save(fp, format=...). Pixels are flat row-major interleaved bytes.
+    The stdlib codecs (PngImage here, jpeg.JpegImage) subclass it with
+    their own `format`, `_CH` (mode -> channels) and `save`."""
 
-    format = "PNG"
+    format = ""
+    _CH: "dict[str, int]" = {}
 
     def __init__(self, mode: str, size: "tuple[int, int]", data: bytes):
-        if mode not in _MODES:
+        if mode not in self._CH:
             raise ValueError(f"unsupported mode {mode!r}")
-        w, h = size
-        ch = _MODES[mode][1]
+        w, h = int(size[0]), int(size[1])
+        ch = self._CH[mode]
         if len(data) != w * h * ch:
             raise ValueError(
                 f"mode {mode} {w}x{h} needs {w * h * ch} bytes, got "
                 f"{len(data)}"
             )
-        self.mode, self.size, self._data = mode, (int(w), int(h)), bytes(data)
+        self.mode, self.size, self._data = mode, (w, h), bytes(data)
 
     @property
     def _channels(self) -> int:
-        return _MODES[self.mode][1]
+        return self._CH[self.mode]
 
-    def convert(self, mode: str) -> "PngImage":
+    def convert(self, mode: str) -> "RawImage":
         if mode == self.mode:
             return self
         if mode != "L":
             raise NotImplementedError(
-                f"png_stdlib converts only to 'L', not {mode!r}"
+                f"{self.format.lower()}_stdlib converts only to 'L', "
+                f"not {mode!r}"
             )
         ch, d = self._channels, self._data
         if self.mode == "LA":  # drop alpha
@@ -158,9 +161,9 @@ class PngImage:
                 (299 * d[i] + 587 * d[i + 1] + 114 * d[i + 2]) // 1000
                 for i in range(0, len(d), ch)
             )
-        return PngImage("L", self.size, out)
+        return type(self)("L", self.size, out)
 
-    def resize(self, size: "tuple[int, int]") -> "PngImage":
+    def resize(self, size: "tuple[int, int]") -> "RawImage":
         """Deterministic nearest-neighbor (``src = dst * n // m``) —
         exactly reproducible in integer SQL, unlike PIL's default
         bicubic."""
@@ -179,7 +182,7 @@ class PngImage:
                     for x in range(dw)
                 )
             )
-        return PngImage(self.mode, (dw, dh), b"".join(rows))
+        return type(self)(self.mode, (dw, dh), b"".join(rows))
 
     def getdata(self):
         """Pixel sequence: ints for L, tuples otherwise (PIL shape)."""
@@ -190,6 +193,13 @@ class PngImage:
             tuple(self._data[i : i + ch])
             for i in range(0, len(self._data), ch)
         ]
+
+
+class PngImage(RawImage):
+    """A decoded PNG: modes L, LA, RGB and RGBA."""
+
+    format = "PNG"
+    _CH = {m: ch for m, (_, ch) in _MODES.items()}
 
     def save(self, fp, format: "str | None" = None) -> None:
         if format not in (None, "PNG"):

@@ -211,12 +211,6 @@ def _doclens(corpus: DataFrame, id_col: str, text_col: str,
     ).withColumn("db", md5_mod(F.col("id").cast("string"), term_buckets))
 
 
-def _bm25_meta(spark, path: str):
-    from ._store import read_meta
-
-    return read_meta(spark, path, _BM25_LAYOUT, kind="bm25 index")
-
-
 def _bm25_committed(spark, path: str, version: "int | None" = None):
     from ._store import committed_state
 

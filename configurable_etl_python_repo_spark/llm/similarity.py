@@ -1416,12 +1416,6 @@ def ivf_build_index(
 _IVF_LAYOUT = "ivf-cid-seg-v3"
 
 
-def _ivf_meta(spark, path: str):
-    from ._store import read_meta
-
-    return read_meta(spark, path, _IVF_LAYOUT, kind="ivf index")
-
-
 def _ivf_committed(spark, path: str, version: "int | None" = None):
     from ._store import committed_state
 

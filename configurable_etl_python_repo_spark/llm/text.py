@@ -10,8 +10,10 @@ from __future__ import annotations
 
 import re
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from .dedup import _words
 
 # Tiny per-language function-word lists for the n-gram/stopword heuristic.
 # Deliberately small + hardcoded so the DuckDB oracle can replicate exactly.
@@ -29,11 +31,6 @@ ENGLISH_STOPWORDS = LANG_STOPWORDS["en"]
 
 #: BPE-ish pre-tokenizer: word pieces, numbers, or single non-space symbols
 BPE_ISH_PATTERN = r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]"
-
-
-def _words(col: Column) -> Column:
-    """Whitespace tokens of the lowercased, trimmed text (empty → [])."""
-    return F.filter(F.split(F.lower(F.trim(col)), r"\s+"), lambda w: w != F.lit(""))
 
 
 def _token_pattern(tokens: "tuple[str, ...]") -> str:

@@ -1,6 +1,8 @@
-"""Pluggable commit-log storage for the transactional gold layer.
+"""Pluggable commit-log storage and the ONE manifest-log protocol built on
+it, shared by the transactional gold layer (sinks/txlog.py) and the
+persisted index stores (llm/_store.py).
 
-The txlog protocol (sinks/txlog.py) needs exactly one strong primitive:
+The protocol needs exactly one strong primitive:
 `put_if_absent(name, data)` — publish a complete blob at a name iff
 nothing exists there, atomically. Everything else (reads, the LATEST
 hint) is best-effort. This is Delta Lake's public LogStore contract; the
@@ -16,12 +18,24 @@ two implementations here are its two canonical realizations:
   the protocol is testable against a stub and runs unchanged against a
   real bucket.
 
-Keys are names relative to the table's `_txlog/` directory
-("v00000001.json", "LATEST") — the store decides where those bytes live.
+Keys are names relative to the log's directory (`_txlog/` for gold,
+`_segments/` for an index) — "v00000001.json", "LATEST" — the store
+decides where those bytes live.
+
+The commit chain (`manifest_name`, `latest_version`, `publish`,
+`prune_manifests`): version N's manifest is created at v{N:08d}.json
+with put_if_absent — the create IS the commit, so two writers based on
+the same snapshot cannot both win. LATEST is a hint written after the
+commit; readers probe forward from it, and a lost, garbled or dangling
+hint falls back to LISTING the log. Retention never deletes a NAME: it
+overwrites old manifests with a small `{"pruned": true}` marker, so no
+version slot is ever winnable twice and a stale writer can never fork
+the log.
 """
 
 from __future__ import annotations
 
+import json
 import os
 import uuid
 
@@ -221,6 +235,115 @@ class S3LogStore(LogStore):
             token = page.get("NextContinuationToken")
             if not token:
                 return names
+
+
+# ---------------------------------------------------------------------------
+# The manifest log: one commit chain for gold and the index stores
+# ---------------------------------------------------------------------------
+
+
+class ConcurrentWriteError(RuntimeError):
+    """Another writer committed between this writer's snapshot read and
+    its publish; re-run against the new snapshot."""
+
+
+#: what retention leaves at a pruned version's name (the payload goes,
+#: the name stays)
+PRUNED_MARKER = json.dumps({"pruned": True}).encode()
+
+
+def manifest_name(version: int) -> str:
+    return f"v{version:08d}.json"
+
+
+def listed_versions(st: LogStore) -> "list[int]":
+    """Every committed manifest version the store can LIST — the
+    recovery primitive (rare path), not the hot path."""
+    out: "list[int]" = []
+    for n in st.list_names():
+        if n.startswith("v") and n.endswith(".json"):
+            try:
+                out.append(int(n[1:-5]))
+            except ValueError:
+                continue
+    return out
+
+
+def latest_version(st: LogStore) -> int:
+    """True current version: the LATEST hint probed FORWARD (a crash
+    between manifest-create and hint-update leaves the hint behind by a
+    bounded number of commits — O(drift) exists() calls, the hot path).
+    A torn, dangling, or garbled hint falls back to LISTING the
+    manifest log and taking the max — the Delta checkpoint-then-list
+    design — then repairs the hint so the next read is O(1) again.
+    Manifest retention never deletes a version's NAME (pruning
+    overwrites the content with a tiny marker), so the forward probe
+    climbs straight through pruned versions, a returned version > 0
+    always has an existing manifest, and a stale writer can never win
+    put_if_absent on a recycled low slot (no slot is ever recycled —
+    the fork-proofing the commit protocol rests on). Logs whose low
+    names an older retention DELETED resolve through the listing."""
+    hint = st.read("LATEST")
+    try:
+        start = int(hint.decode().strip()) if hint is not None else 0
+    except ValueError:
+        start = 0
+    if start < 0:
+        start = 0
+    version = start
+    while st.exists(manifest_name(version + 1)):
+        version += 1
+    fell_back = version == 0 or not st.exists(manifest_name(version))
+    if fell_back:
+        version = max(listed_versions(st), default=0)
+    if version > 0 and (start == 0 or fell_back):
+        try:
+            # best-effort hint repair, mirroring publish: a LOST or
+            # garbled hint otherwise makes every read re-walk the
+            # whole chain (climb from v0 through years of marker
+            # names) or re-LIST the log until the next commit happens
+            # to rewrite it. Best-effort for real (pure readers may
+            # lack write permission)
+            st.write("LATEST", str(version).encode())
+        except Exception:
+            pass
+    return version
+
+
+def publish(st: LogStore, base: int, payload: dict) -> int:
+    """THE commit: create manifest v{base+1} iff no manifest with that
+    version exists (put_if_absent), then refresh the LATEST hint. The
+    loser of a race raises ConcurrentWriteError. If the hint write
+    raises, the version is still committed: readers probe forward to
+    it. Returns the committed version."""
+    data = json.dumps(payload).encode()
+    if not st.put_if_absent(manifest_name(base + 1), data):
+        raise ConcurrentWriteError(
+            f"concurrent writer already published v{base + 1}"
+        )
+    st.write("LATEST", str(base + 1).encode())
+    return base + 1
+
+
+def prune_manifests(st: LogStore, cutoff: int) -> "list[str]":
+    """Retention: OVERWRITE every manifest below version `cutoff` with
+    PRUNED_MARKER, never delete the name. A deleted name's
+    put_if_absent slot becomes winnable again, and a writer whose
+    resolved snapshot went stale across the pruned range could fork the
+    log by committing into it (a silently lost commit). Occupied-forever
+    names keep version-uniqueness absolute; what retention bounds is
+    the manifest PAYLOAD, the actual metadata-growth term. Marker writes
+    are idempotent, so concurrent or crashed-and-retried prunes are
+    safe. Returns the names newly pruned (bare names — they live in the
+    LogStore, which need not be a local path)."""
+    pruned: "list[str]" = []
+    for v in sorted(x for x in listed_versions(st) if x < cutoff):
+        raw = st.read(manifest_name(v))
+        if raw is None or raw == PRUNED_MARKER:
+            continue
+        st.write(manifest_name(v), PRUNED_MARKER)
+        pruned.append(manifest_name(v))
+    return pruned
 
 
 # ---------------------------------------------------------------------------

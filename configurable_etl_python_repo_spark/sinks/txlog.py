@@ -11,31 +11,32 @@ tests/test_upsert.py). This module closes that gap:
 
   gold/
     _txlog/v{N}.json   immutable snapshot manifests: partition -> data dir
-    _txlog/LATEST      single pointer file naming the current version
+    _txlog/LATEST      best-effort hint naming the current version
     data/{commit}/     each commit's parquet, partitioned by partition_col
 
   - Writers never mutate visible data: a merge writes NEW files under a
-    fresh commit dir, then commits by creating the NEXT manifest
-    v{N+1}.json with an ATOMIC create-if-absent (full content hard-linked
-    into place — os.link fails with FileExistsError if v{N+1} exists, so
-    exactly one of two racing writers wins). The manifest IS the commit,
-    exactly Delta Lake's log-store contract: durable the instant it
-    exists, and never partially visible (the link publishes complete
-    bytes or nothing). A crash at any earlier point leaves only
+    fresh commit dir, then commits by creating the NEXT manifest through
+    the shared commit chain (`sinks/logstore.publish`: an atomic
+    create-if-absent, so exactly one of two racing writers wins). The
+    manifest IS the commit: durable the instant it exists and never
+    partially visible. A crash at any earlier point leaves only
     invisible orphan data files (vacuum_gold_tx removes them).
-  - LATEST is a HINT, not the commit: publish updates it best-effort
-    after the manifest lands, and readers probe forward from it for
-    newer manifests. A crash between manifest-create and hint-update
-    therefore leaves a COMMITTED version that the next reader/writer
-    discovers by probing — no wedged table, no ambiguous debris.
+  - LATEST is a HINT, not the commit: readers probe forward from it,
+    and a lost or garbled hint recovers by listing the log
+    (`logstore.latest_version`) — no wedged table, no ambiguous debris.
   - Readers resolve the newest manifest once and read only the files
     that snapshot names — snapshot isolation: a concurrent merge never
     tears a read.
-  - Writers are optimistic: publish checks that the newest manifest
+  - Writers are optimistic: `_publish` checks that the newest manifest
     still names the snapshot the merge was based on, and the atomic
     create arbitrates the remaining race — the loser raises
     ConcurrentWriteError (retry = re-run the merge; it re-reads the new
     snapshot).
+  - Retention (`vacuum_gold_tx(keep_versions=N)`) prunes old manifests
+    by overwriting them with a marker (`logstore.prune_manifests`), the
+    same log the index stores keep: no version name is ever freed, so
+    a stale writer cannot commit into a recycled slot and fork the
+    table.
 
 Scale notes: the manifest maps partitions to DIRECTORIES (one per commit
 that last rewrote the partition), so its size is O(partitions), not
@@ -63,12 +64,8 @@ from functools import reduce
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .logstore import LocalLogStore, LogStore
-
-
-class ConcurrentWriteError(RuntimeError):
-    """Another merge committed between this merge's snapshot read and its
-    publish; re-run the merge against the new snapshot."""
+from . import logstore
+from .logstore import ConcurrentWriteError, LocalLogStore, LogStore
 
 
 def _txdir(gold_path: str) -> str:
@@ -79,35 +76,13 @@ def _store(gold_path: str, store: LogStore | None) -> LogStore:
     return store if store is not None else LocalLogStore(_txdir(gold_path))
 
 
-def _manifest_name(version: int) -> str:
-    return f"v{version:08d}.json"
-
-
-def _latest_version(gold_path: str, store: LogStore | None = None) -> int:
-    """True current version: the LATEST hint, probed FORWARD for newer
-    manifests (a crash between manifest-create and hint-update leaves the
-    hint behind by a bounded number of commits — normally zero or one)."""
-    st = _store(gold_path, store)
-    hint = st.read("LATEST")
-    try:
-        version = int(hint.decode().strip()) if hint is not None else 0
-    except ValueError:
-        # a torn/garbled best-effort hint degrades like a missing one:
-        # probe from 0 rather than bricking every read and write
-        version = 0
-    if version < 0:
-        version = 0
-    while st.exists(_manifest_name(version + 1)):
-        version += 1
-    if version > 0 and not st.exists(_manifest_name(version)):
-        # a hint that PARSES but points past every manifest (overwritten
-        # with junk, restored from a different table, ...) must degrade
-        # like a garbled one — otherwise _read_latest json.loads(None)s.
-        # Probing from 0 finds the true newest chain-reachable version.
-        version = 0
-        while st.exists(_manifest_name(version + 1)):
-            version += 1
-    return version
+def _partitions(st: LogStore, version: int) -> "dict[str, str] | None":
+    """{partition_value: data_dir} of manifest v{version}; None when that
+    version was never committed or vacuum pruned it to a marker."""
+    raw = st.read(logstore.manifest_name(version))
+    if raw is None or raw == logstore.PRUNED_MARKER:
+        return None
+    return json.loads(raw)["partitions"]
 
 
 def _read_latest(
@@ -116,34 +91,18 @@ def _read_latest(
     """(version, {partition_value: data_dir}) of the current snapshot;
     (0, {}) for a table that does not exist yet."""
     st = _store(gold_path, store)
-    version = _latest_version(gold_path, st)
+    version = logstore.latest_version(st)
     if version == 0:
         return 0, {}
-    manifest = json.loads(st.read(_manifest_name(version)))
-    return version, manifest["partitions"]
-
-
-def _commit_manifest(gold_path: str, version: int, payload: dict,
-                     store: LogStore | None = None) -> None:
-    """THE commit: publish a complete manifest at v{version} iff no
-    manifest with that version exists, atomically — the store's
-    put_if_absent (os.link locally, a conditional put on an object
-    store; see sinks/logstore.py). Two racing writers cannot both win,
-    and readers can never observe a half-written manifest."""
-    st = _store(gold_path, store)
-    data = json.dumps(payload).encode()
-    if not st.put_if_absent(_manifest_name(version), data):
-        raise ConcurrentWriteError(
-            f"concurrent writer already published v{version}"
+    partitions = _partitions(st, version)
+    if partitions is None:
+        # the newest manifest is never pruned, so this is a log
+        # modified outside the protocol
+        raise FileNotFoundError(
+            f"current snapshot v{version} at {gold_path} is missing or "
+            f"pruned — the commit log was modified outside the protocol"
         )
-
-
-def _update_latest_hint(gold_path: str, version: int,
-                        store: LogStore | None = None) -> None:
-    """Best-effort pointer refresh AFTER the manifest committed. Failure
-    here loses nothing: readers and writers probe forward from the stale
-    hint, and the next successful publish heals it."""
-    _store(gold_path, store).write("LATEST", str(version).encode())
+    return version, partitions
 
 
 def _publish(gold_path: str, base_version: int,
@@ -151,21 +110,17 @@ def _publish(gold_path: str, base_version: int,
              store: LogStore | None = None) -> int:
     """Advance the snapshot from base_version to base_version+1. The
     stale-snapshot check catches conflicts early; the atomic manifest
-    create (_commit_manifest) arbitrates the remaining race — first
+    create (logstore.publish) arbitrates the remaining race — first
     writer wins, the loser raises ConcurrentWriteError."""
     st = _store(gold_path, store)
-    current = _latest_version(gold_path, st)
+    current = logstore.latest_version(st)
     if current != base_version:
         raise ConcurrentWriteError(
             f"snapshot moved v{base_version} -> v{current} during merge"
         )
-    version = base_version + 1
-    _commit_manifest(
-        gold_path, version, {"version": version, "partitions": partitions},
-        st,
-    )
-    _update_latest_hint(gold_path, version, st)
-    return version
+    return logstore.publish(st, base_version, {
+        "version": base_version + 1, "partitions": partitions,
+    })
 
 
 def _read_partition_dirs(
@@ -204,12 +159,12 @@ def read_gold_tx(
     if version is None:
         _, manifest = _read_latest(gold_path, st)
     else:
-        raw = st.read(_manifest_name(version))
-        if raw is None:
+        manifest = _partitions(st, version)
+        if manifest is None:
             raise FileNotFoundError(
-                f"no snapshot v{version} at {gold_path}"
+                f"no snapshot v{version} at {gold_path} (never committed, "
+                f"or expired by vacuum_gold_tx)"
             )
-        manifest = json.loads(raw)["partitions"]
     df = _read_partition_dirs(spark, manifest, partition_col)
     if df is None:
         raise FileNotFoundError(f"no committed snapshot at {gold_path}")
@@ -301,7 +256,9 @@ def vacuum_gold_tx(
     newest N snapshots — their time-travel reads stop working and their
     exclusively-referenced data dirs are removed; N is the retention
     window readers pinned to old versions must finish within (the
-    Delta/Iceberg VACUUM contract). Returns the removed data dirs.
+    Delta/Iceberg VACUUM contract). Expired manifests are overwritten
+    with the pruned marker, never deleted (logstore.prune_manifests), so
+    their version names stay taken. Returns the removed data dirs.
 
     A dir that NO manifest (current or expired) has ever referenced is
     ambiguous: crash debris, or a concurrent merge's freshly written
@@ -320,8 +277,6 @@ def vacuum_gold_tx(
     lister this raises rather than silently finding nothing to delete
     (expiring manifests there would permanently orphan their data dirs:
     the expired manifest is the only record of what they were)."""
-    from .logstore import LocalDataLister
-
     if lister is None:
         if not os.path.isdir(gold_path):
             raise NotImplementedError(
@@ -329,7 +284,7 @@ def vacuum_gold_tx(
                 f"gold pass lister=S3DataLister(bucket, client) so data "
                 f"cleanup reaches the bucket before manifests expire"
             )
-        lister = LocalDataLister()
+        lister = logstore.LocalDataLister()
     st = _store(gold_path, store)
     version, _ = _read_latest(gold_path, st)
     first_kept = 1
@@ -338,25 +293,17 @@ def vacuum_gold_tx(
         if keep_versions < 1:
             raise ValueError("keep_versions must be >= 1")
         first_kept = max(1, version - keep_versions + 1)
-        # HEAL the hint BEFORE expiring manifests: _latest_version probes
-        # forward from the hint, and expiry is about to delete the bottom
-        # of that chain — a missing/stale-low hint afterwards would make
-        # the table read as empty (and a merge would then re-commit v1,
-        # shadowing the live snapshot). With the hint pinned at `version`
-        # first, a crash mid-expiry leaves a fully working table.
-        _update_latest_hint(gold_path, version, st)
-        for v in range(1, first_kept):
-            raw = st.read(_manifest_name(v))
-            if raw is not None:
-                for d in json.loads(raw)["partitions"].values():
+        # collect the expiring snapshots' data dirs BEFORE pruning:
+        # their manifests are the only record of what those dirs were
+        for v in logstore.listed_versions(st):
+            if v < first_kept:
+                for d in (_partitions(st, v) or {}).values():
                     expired_refs.add(os.path.dirname(d))
-                st.delete(_manifest_name(v))
+        logstore.prune_manifests(st, first_kept)
     live: set[str] = set()
     for v in range(first_kept, version + 1):
-        raw = st.read(_manifest_name(v))
-        if raw is not None:
-            for d in json.loads(raw)["partitions"].values():
-                live.add(os.path.dirname(d))
+        for d in (_partitions(st, v) or {}).values():
+            live.add(os.path.dirname(d))
     removed = []
     for full in lister.list_commit_dirs(gold_path):
         if full in live:

@@ -30,6 +30,7 @@ from configurable_etl_python_repo_spark.llm.search import (
     bm25_extend_index,
     bm25_search_index,
 )
+from configurable_etl_python_repo_spark.sinks import logstore
 from configurable_etl_python_repo_spark.sinks.txlog import (
     ConcurrentWriteError,
 )
@@ -318,7 +319,7 @@ def test_two_writer_extend_race_both_segments_commit(
         idx, "arrays", seg_c, "ab",
     )
 
-    real_publish = ST._publish
+    real_publish = logstore.publish
     state = {"raced": False}
 
     def racy_publish(st, base, payload):
@@ -334,9 +335,9 @@ def test_two_writer_extend_race_both_segments_commit(
             return real_publish(st, base, payload)  # ...B loses, raises
         return real_publish(st, base, payload)
 
-    monkeypatch.setattr(ST, "_publish", racy_publish)
+    monkeypatch.setattr(logstore, "publish", racy_publish)
     assert minhash_extend_index(part_b, idx) is True
-    monkeypatch.setattr(ST, "_publish", real_publish)
+    monkeypatch.setattr(logstore, "publish", real_publish)
 
     version, man = ST.read_manifest(idx)
     assert version == 3 and len(man["segments"]) == 3  # build + C + B

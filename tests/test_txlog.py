@@ -1,13 +1,15 @@
 """Transactional gold MERGE (manifest-pointer commit protocol)."""
 
+import ast
 import glob
 import os
+import re
 
 import pytest
 
 from pyspark.sql import Row
 
-from configurable_etl_python_repo_spark.sinks import txlog
+from configurable_etl_python_repo_spark.sinks import logstore, txlog
 from configurable_etl_python_repo_spark.sinks.txlog import (
     ConcurrentWriteError,
     read_gold_tx,
@@ -124,10 +126,14 @@ def test_tx_crash_between_manifest_and_pointer_is_committed(
     base = spark.createDataFrame([Row(study_code="A", subject="s1", val="v0")])
     tx_merge_upsert(spark, gold, base, key_cols=["study_code", "subject"])
 
-    def crash(*a, **kw):
-        raise OSError("power loss after manifest create")
+    real_write = logstore.LocalLogStore.write
 
-    monkeypatch.setattr(txlog, "_update_latest_hint", crash)
+    def crash(self, name, data):
+        if name == "LATEST":  # the shared publish's hint write
+            raise OSError("power loss after manifest create")
+        real_write(self, name, data)
+
+    monkeypatch.setattr(logstore.LocalLogStore, "write", crash)
     upd = spark.createDataFrame([Row(study_code="A", subject="s1", val="v1")])
     with pytest.raises(OSError, match="power loss"):
         tx_merge_upsert(spark, gold, upd, key_cols=["study_code", "subject"])
@@ -164,7 +170,7 @@ def test_tx_two_writer_race_arbitrated_by_manifest_create(
 
     # writer B raced: it read v1 before A committed, and (simulating the
     # worst interleaving) its early stale-check ALSO still saw v1
-    monkeypatch.setattr(txlog, "_latest_version", lambda *a, **k: 1)
+    monkeypatch.setattr(logstore, "latest_version", lambda *a, **k: 1)
     with pytest.raises(ConcurrentWriteError):
         txlog._publish(gold, base_version=1, partitions={})
     monkeypatch.undo()
@@ -458,8 +464,7 @@ def test_tx_object_store_two_writer_race(spark, tmp_path):
     assert txlog._publish(gold, 0, {"A": "d1"}, store) == 1
     # writer B, based on the same v0 snapshot, loses the put race
     with pytest.raises(ConcurrentWriteError):
-        txlog._commit_manifest(gold, 1, {"version": 1, "partitions": {}},
-                               store)
+        logstore.publish(store, 0, {"version": 1, "partitions": {}})
     # and B's retry from the NEW snapshot serializes
     assert txlog._publish(gold, 1, {"A": "d2"}, store) == 2
 
@@ -475,7 +480,9 @@ def test_tx_object_store_vacuum_expires_manifests(spark, tmp_path):
                     store=store)
     vacuum_gold_tx(gold, keep_versions=1, retention_s=0, store=store)
     keys = {k for _, k in client.blobs}
-    assert "tables/study/_txlog/v00000001.json" not in keys
+    # expired v1 keeps its name, holding the pruned marker
+    assert client.blobs[("gold-bucket", "tables/study/_txlog/v00000001.json")] \
+        == logstore.PRUNED_MARKER
     assert "tables/study/_txlog/v00000002.json" in keys
     with pytest.raises(FileNotFoundError):
         read_gold_tx(spark, gold, version=1, store=store)
@@ -521,11 +528,11 @@ def test_vacuum_refuses_non_local_gold_path():
 
 
 def test_vacuum_heals_missing_hint_before_expiry(spark, tmp_path):
-    """The LATEST hint is best-effort; if it never landed, _latest_version
-    probes from 0 — but keep_versions expiry deletes the bottom of that
-    probe chain. vacuum must pin the hint at the current version FIRST,
-    or the table would read as empty and the next merge would shadow the
-    live snapshot at v1."""
+    """The LATEST hint is best-effort; if it never landed, the resolver
+    (logstore.latest_version) probes from 0 and repairs it. keep_versions
+    expiry overwrites the bottom of that probe chain with markers, never
+    deletes it, so the table still reads its newest snapshot and the
+    next merge cannot shadow the live snapshot at v1."""
     gold = str(tmp_path / "gold")
     for i in range(3):
         df = spark.createDataFrame(
@@ -534,7 +541,10 @@ def test_vacuum_heals_missing_hint_before_expiry(spark, tmp_path):
     os.remove(f"{gold}/_txlog/LATEST")  # hint lost (best-effort)
 
     vacuum_gold_tx(gold, keep_versions=1, retention_s=0)
-    assert not os.path.exists(f"{gold}/_txlog/v00000001.json")
+    with open(f"{gold}/_txlog/v00000001.json", "rb") as f:
+        assert f.read() == logstore.PRUNED_MARKER        # name kept
+    with pytest.raises(FileNotFoundError):
+        read_gold_tx(spark, gold, version=1)             # still expired
     # still reads the newest snapshot and merges continue from it
     assert _rows(spark, gold) == {("A", "s1"): "v2"}
     nxt = spark.createDataFrame(
@@ -694,3 +704,131 @@ def test_s3_logstore_list_names_paginates():
     assert sorted(store.list_names()) == sorted(names + ["LATEST"])
     store.delete(names[0])
     assert sorted(store.list_names()) == sorted(names[1:] + ["LATEST"])
+
+
+# ---------------------------------------------------------------------------
+# One commit chain: gold prunes by marker and recovers a lost hint by
+# listing (sinks/logstore), exactly like the index stores
+# ---------------------------------------------------------------------------
+
+
+def _three_commits(gold):
+    """Publish v1..v3 (Spark-free: the manifests only name dirs). B is
+    written once, at v1; A is rewritten by every commit."""
+    parts = {}
+    for v in range(1, 4):
+        parts = {
+            "A": f"{gold}/data/c{v}/study_code=A",
+            "B": f"{gold}/data/c1/study_code=B",
+        }
+        assert txlog._publish(gold, v - 1, parts) == v
+    return parts
+
+
+@pytest.mark.parametrize("hint", ["garbled", "missing"])
+def test_gold_lost_hint_after_vacuum_does_not_fork(tmp_path, hint):
+    """After keep_versions expiry and a garbled or missing LATEST, the
+    table still resolves its current snapshot, and the next publish
+    lands at version+1 with partition B intact. (When expiry deleted the
+    low manifest names, this read returned (0, {}) and a v0-based
+    publish won the recycled v1 slot, dropping B without an error.)"""
+    gold = str(tmp_path / "gold")
+    parts = _three_commits(gold)
+    vacuum_gold_tx(gold, keep_versions=1)
+    latest = os.path.join(gold, "_txlog", "LATEST")
+    if hint == "garbled":
+        with open(latest, "w") as f:
+            f.write("not-a-version")
+    else:
+        os.remove(latest)
+    assert txlog._read_latest(gold) == (3, parts)
+    nxt = {**parts, "A": f"{gold}/data/c4/study_code=A"}
+    assert txlog._publish(gold, 3, nxt) == 4
+    assert txlog._read_latest(gold) == (4, nxt)
+    assert nxt["B"] == f"{gold}/data/c1/study_code=B"
+    with pytest.raises(ConcurrentWriteError):
+        txlog._publish(gold, 0, {"A": f"{gold}/data/c5/study_code=A"})
+
+
+def test_gold_pruned_slot_cannot_be_rewon(tmp_path):
+    """A pruned gold version keeps its name: put_if_absent on it loses,
+    so no writer can commit into an expired slot."""
+    gold = str(tmp_path / "gold")
+    _three_commits(gold)
+    vacuum_gold_tx(gold, keep_versions=1)
+    st = logstore.LocalLogStore(os.path.join(gold, "_txlog"))
+    for name in ("v00000001.json", "v00000002.json"):
+        assert st.put_if_absent(name, b'{"version": 0}') is False
+        assert st.read(name) == logstore.PRUNED_MARKER
+    with pytest.raises(ConcurrentWriteError):
+        logstore.publish(st, 0, {"version": 1, "partitions": {}})
+
+
+def test_gold_log_with_deleted_low_names_resolves_by_listing(tmp_path):
+    """A log whose low manifests an older vacuum DELETED, with LATEST
+    missing, resolves its newest version through listing (and repairs
+    the hint); merges and vacuums continue from it."""
+    gold = str(tmp_path / "gold")
+    parts = _three_commits(gold)
+    txdir = os.path.join(gold, "_txlog")
+    for name in ("v00000001.json", "v00000002.json", "LATEST"):
+        os.remove(os.path.join(txdir, name))
+    assert txlog._read_latest(gold) == (3, parts)
+    with open(os.path.join(txdir, "LATEST")) as f:
+        assert f.read().strip() == "3"
+    assert txlog._publish(gold, 3, parts) == 4
+    assert vacuum_gold_tx(gold, keep_versions=1) == []
+    assert txlog._read_latest(gold) == (4, parts)
+
+
+PKG = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+    "configurable_etl_python_repo_spark",
+)
+_NAME_FORMAT = re.compile(r"(%08d|:08d\})\.json")
+
+
+def _manifest_log_literals(path: str) -> "set[str]":
+    """Which manifest-log spellings a module holds as code: "name" for
+    a version-name format (`f"v{v:08d}.json"`, `"v%08d.json"`,
+    `"v{:08d}.json"`), "LATEST" for the hint's name. Prose in
+    docstrings and comments does not count."""
+    with open(path) as f:
+        tree = ast.parse(f.read(), path)
+    found = set()
+    for n in ast.walk(tree):
+        if isinstance(n, ast.Constant) and isinstance(n.value, str):
+            if n.value == "LATEST":
+                found.add("LATEST")
+            if _NAME_FORMAT.search(n.value):
+                found.add("name")
+        elif isinstance(n, ast.JoinedStr):
+            if _NAME_FORMAT.search(ast.unparse(n)):
+                found.add("name")
+    return found
+
+
+def test_manifest_log_spelled_in_one_module():
+    """The version-name format and the LATEST hint name live in
+    sinks/logstore.py only: a second spelling is a second commit chain
+    that can drift from the first."""
+    where: "dict[str, list[str]]" = {}
+    for path in sorted(glob.glob(os.path.join(PKG, "**", "*.py"),
+                                 recursive=True)):
+        for lit in _manifest_log_literals(path):
+            where.setdefault(lit, []).append(os.path.relpath(path, PKG))
+    one = [os.path.join("sinks", "logstore.py")]
+    assert where == {"name": one, "LATEST": one}
+
+
+def test_manifest_log_literal_detector(tmp_path):
+    src = tmp_path / "m.py"
+    src.write_text(
+        '"""Docstring naming v00000001.json and LATEST."""\n'
+        'a = f"v{version:08d}.json"\n'
+    )
+    assert _manifest_log_literals(str(src)) == {"name"}
+    src.write_text('a = "v%08d.json" % v\nb = st.read("LATEST")\n')
+    assert _manifest_log_literals(str(src)) == {"name", "LATEST"}
+    src.write_text('a = "v{:08d}.json".format(v)\n# "LATEST"\n')
+    assert _manifest_log_literals(str(src)) == {"name"}
