@@ -1,9 +1,20 @@
 """Shared plumbing for the persisted index stores (MinHash, SimHash,
-embedding, BM25, ANN IVF): the `_meta` read + layout guard every
-probe/search/extend runs first, and the SEGMENT-MANIFEST commit
-protocol that makes build/extend/compact ATOMIC. ONE definition on
-purpose — a load-bearing guard duplicated per store could drift (one
-copy gaining a check the others miss).
+embedding int8/PQ, BM25, ANN IVF, PQ): every storage decision the
+families share lives here, and the family modules only build their rows
+and name their relations. ONE definition on purpose — a load-bearing
+guard duplicated per store could drift (one copy gaining a check the
+others miss):
+
+- the `_meta` read + layout guard every probe/search/extend/delete/
+  compact runs first (committed_state: one read, checked against the SET
+  of layouts the caller can read; callers dispatch on `meta.layout`);
+- the sidecars: `_meta` (one row, written by commit_build) and the
+  meta_id-STAMPED quantizer tables `_centroids` and `_codebooks` (one
+  stamped writer, one torn-check reader);
+- the segment directory `<rel>/seg=<id>` (segment_dir; read_segment
+  reads a just-written one back) — no other module formats it;
+- the SEGMENT-MANIFEST commit protocol that makes build/extend/compact
+  ATOMIC.
 
 Durability contract, stated once for every store. The commit chain
 itself (version names, the LATEST resolver, the put_if_absent publish,
@@ -19,12 +30,13 @@ also uses; this module adds the segment payloads on top:
                          committed segment, sub-partitioned by the
                          store's own key (kb/ab/cid/tb)
 
-- A BUILD writes fresh segment directories for every relation, writes
-  `_meta` (stamped with a fresh `meta_id`), then commits by creating
-  the next manifest with an ATOMIC create-if-absent — the manifest IS
-  the commit. The manifest names ONLY the new segment, so a rebuild
-  atomically replaces the whole index; old segments become invisible
-  orphans (vacuum_index removes them).
+- A BUILD writes fresh segment directories for every relation, then its
+  stamped sidecars, then `_meta` (stamped with a fresh `meta_id`), then
+  commits by creating the next manifest with an ATOMIC create-if-absent
+  — the manifest IS the commit (commit_build owns the last two steps).
+  The manifest names ONLY the new segment, so a rebuild atomically
+  replaces the whole index; old segments become invisible orphans
+  (vacuum_index removes them).
 - An EXTEND writes new segment directories, then commits a manifest
   appending the segment id. A job that dies mid-extend leaves only
   orphan directories NO reader ever lists into its DataFrame (probes
@@ -92,9 +104,8 @@ def sidecar_rows(spark: SparkSession, path: str) -> list:
     Spark row path decode to the same Python values. Non-local paths
     (object stores) keep the Spark scan. Missing or unreadable-as-
     parquet trees raise AnalysisException exactly like the Spark
-    reader, so every caller's error contract (strict read or
-    layout-peek fallback) is unchanged; transient IO errors propagate
-    as themselves (the r12 ADVICE discipline)."""
+    reader, so every caller's error contract is unchanged; transient
+    IO errors propagate as themselves (the r12 ADVICE discipline)."""
     from pyspark.errors import AnalysisException
 
     local = _local_fs_path(path)
@@ -135,29 +146,13 @@ class _SidecarRow:
         return f"_SidecarRow({self._rec!r})"
 
 
-def read_meta(
-    spark: SparkSession,
-    path: str,
-    expected_layout: str,
-    kind: str = "index",
-):
-    """Read a store's single-row `_meta` and refuse a tree whose layout
-    stamp differs (appending into or probing a different physical
-    layout corrupts / misreads the store)."""
-    rows = sidecar_rows(spark, path + "/_meta")
-    if len(rows) != 1:
-        raise ValueError(
-            f"corrupt {kind} at {path}: _meta has {len(rows)} rows"
-        )
-    meta = rows[0]
-    layout = getattr(meta, "layout", None)
-    if layout != expected_layout:
-        raise ValueError(
-            f"{kind} at {path} has layout {layout!r}; this code reads "
-            f"{expected_layout!r} — rebuild the index (a mismatched "
-            f"layout would corrupt the store)"
-        )
-    return meta
+def _write_sidecar(
+    spark: SparkSession, path: str, name: str, rows: list, ddl: str
+) -> None:
+    """Overwrite the tiny one-file parquet sidecar `<path>/<name>`."""
+    spark.createDataFrame(rows, ddl).coalesce(1).write.mode(
+        "overwrite"
+    ).parquet(f"{path}/{name}")
 
 
 # ---------------------------------------------------------------------------
@@ -254,7 +249,7 @@ def committed_tags(path: str, store: LogStore | None = None) -> "dict":
 def committed_state(
     spark: SparkSession,
     path: str,
-    expected_layout: str,
+    layouts,
     kind: str = "index",
     store: LogStore | None = None,
     version: "int | None" = None,
@@ -266,6 +261,13 @@ def committed_state(
     dirs); pass the returned manifest to read_deletes for the
     tombstones of the SAME snapshot.
 
+    `layouts` is the collection of layout stamps the caller can read
+    (a family with two physical layouts passes both; delete/compact
+    pass COMPACT_SPECS). `_meta` is read ONCE: a tree stamped with any
+    other layout is refused (appending into or probing a different
+    physical layout corrupts / misreads the store), and callers
+    dispatch on the returned `meta.layout`.
+
     `version` pins an EXPLICIT snapshot (time travel): the probe runs
     against manifest vN exactly as it ran when vN was latest. Spans
     extends, deletes, and compactions WITHIN one build generation —
@@ -274,7 +276,19 @@ def committed_state(
     until vacuum_index physically removes segments the CURRENT
     manifest no longer references (the Delta-style VACUUM bound; a
     vacuumed snapshot read fails loudly on the missing directory)."""
-    meta = read_meta(spark, path, expected_layout, kind)
+    rows = sidecar_rows(spark, path + "/_meta")
+    if len(rows) != 1:
+        raise ValueError(
+            f"corrupt {kind} at {path}: _meta has {len(rows)} rows"
+        )
+    meta = rows[0]
+    layout = getattr(meta, "layout", None)
+    if layout not in layouts:
+        raise ValueError(
+            f"{kind} at {path} has layout {layout!r}; this code reads "
+            f"{' or '.join(map(repr, sorted(layouts)))} — rebuild the "
+            f"index (a mismatched layout would corrupt the store)"
+        )
     version, man = read_manifest(path, store, version=version)
     if version == 0 or not man["segments"]:
         raise ValueError(
@@ -299,11 +313,23 @@ def committed_state(
 
 
 def commit_build(
-    path: str, seg: str, meta_id: str, store: LogStore | None = None,
+    spark: SparkSession,
+    path: str,
+    seg: str,
+    meta_id: str,
+    meta_row: tuple,
+    meta_ddl: str,
+    store: LogStore | None = None,
     row_count: "int | None" = None,
 ) -> int:
-    """THE build commit: publish a manifest naming ONLY the fresh
-    segment — an atomic whole-index replace. Tags reset: a rebuild is a
+    """THE build commit, called once the build's segments and stamped
+    sidecars are written: overwrite `_meta` with the family's one row
+    (`meta_row` under `meta_ddl`, carrying `meta_id`), then publish a
+    manifest naming ONLY the fresh segment — an atomic whole-index
+    replace. The order (segments, stamped sidecars, `_meta`, manifest)
+    is what makes a crashed REbuild DETECTABLY torn rather than
+    silently mixed: every sidecar the manifest's meta_id disagrees with
+    is refused by its reader. Tags reset: a rebuild is a
     new corpus generation, and idempotence markers from the old one
     must not suppress re-admission into it. Retries commit races (the
     loser of each race re-reads and re-publishes; its segment data is
@@ -312,6 +338,7 @@ def commit_build(
     statistic policies (the embedding drift warning) read instead of
     scanning the store; segments without an entry are simply absent
     from the map (readers fall back to counting them)."""
+    _write_sidecar(spark, path, "_meta", [meta_row], meta_ddl)
     st = _seg_store(path, store)
     for _ in range(_MAX_COMMIT_RETRIES):
         version = logstore.latest_version(st)
@@ -465,19 +492,42 @@ def commit_replace(
 
 
 # ---------------------------------------------------------------------------
-# Sidecar relations (_centroids)
+# Stamped sidecars (_centroids, _codebooks)
 # ---------------------------------------------------------------------------
 #
-# The coarse-quantizer table is a SIDECAR like _meta: rewritten in place
-# by rebuilds, outside the segment protocol. A rebuild is therefore NOT
+# The quantizer tables are SIDECARS like _meta: rewritten in place by
+# rebuilds, outside the segment protocol. A rebuild is therefore NOT
 # fully atomic — a crash between the sidecar overwrites and commit_build
 # leaves the previous index UNREADABLE (the torn-rebuild guard fires)
 # rather than readable; what the protocol guarantees is that the tear is
-# DETECTED, never silently probed. Stamping meta_id into every centroid
-# row extends that detection to _centroids: a probe that resolved
-# committed_state and then read a mid-rebuild-swapped centroid table
-# fails loudly instead of assigning the batch under new centroids
-# against old segments.
+# DETECTED, never silently probed. Stamping meta_id into every sidecar
+# row extends that detection to the quantizers: a probe that resolved
+# committed_state and then read a mid-rebuild-swapped table fails loudly
+# instead of assigning the batch under new quantizers against old
+# segments.
+
+
+def _write_stamped(spark, path, name, rows, ddl, meta_id) -> None:
+    _write_sidecar(
+        spark, path, name, [(*r, meta_id) for r in rows],
+        ddl + ", meta_id string",
+    )
+
+
+def _read_stamped(spark, path, name, meta_id, kind) -> list:
+    """A stamped sidecar's rows, refused loudly if any row's generation
+    differs from the committed manifest's meta_id (torn rebuild, or a
+    rebuild completing underneath a running probe)."""
+    rows = sidecar_rows(spark, f"{path}/{name}")
+    bad = {getattr(r, "meta_id", None) for r in rows} - {meta_id}
+    if bad:
+        raise ValueError(
+            f"{kind} at {path} is torn: {name} generation(s) "
+            f"{sorted(map(repr, bad))} do not match the committed "
+            f"manifest's {meta_id!r} — a rebuild crashed or completed "
+            f"mid-read; re-run the build (or the probe)"
+        )
+    return rows
 
 
 def write_centroids(
@@ -486,13 +536,12 @@ def write_centroids(
     centroids: "list[tuple[int, list[float]]]",
     meta_id: str,
 ) -> None:
-    """Persist the coarse quantizer with the build's meta_id stamped on
-    every row, so readers can cross-check it against the committed
-    manifest's generation exactly like _meta."""
-    spark.createDataFrame(
-        [(int(c), [float(x) for x in v], meta_id) for c, v in centroids],
-        "cid long, cvec array<double>, meta_id string",
-    ).coalesce(1).write.mode("overwrite").parquet(path + "/_centroids")
+    """Persist the coarse quantizer, meta_id-stamped."""
+    _write_stamped(
+        spark, path, "_centroids",
+        [(int(c), [float(x) for x in v]) for c, v in centroids],
+        "cid long, cvec array<double>", meta_id,
+    )
 
 
 def read_centroids(
@@ -501,20 +550,31 @@ def read_centroids(
     meta_id: str,
     kind: str = "index",
 ) -> "list[tuple[int, list[float]]]":
-    """The ONLY way probes/extends read the quantizer: sorted
-    (cid, cvec) rows, refused loudly if any row's generation differs
-    from the committed manifest's meta_id (torn rebuild, or a rebuild
-    completing underneath a running probe)."""
-    rows = sidecar_rows(spark, path + "/_centroids")
-    bad = {getattr(r, "meta_id", None) for r in rows} - {meta_id}
-    if bad:
-        raise ValueError(
-            f"{kind} at {path} is torn: _centroids generation(s) "
-            f"{sorted(map(repr, bad))} do not match the committed "
-            f"manifest's {meta_id!r} — a rebuild crashed or completed "
-            f"mid-read; re-run the build (or the probe)"
-        )
+    """The ONLY way probes/extends read the coarse quantizer: sorted
+    (cid, cvec) rows of the committed generation."""
+    rows = _read_stamped(spark, path, "_centroids", meta_id, kind)
     return sorted((int(r.cid), list(r.cvec)) for r in rows)
+
+
+def write_codebooks(spark: SparkSession, path: str, codebooks,
+                    meta_id: str) -> None:
+    """Persist the per-subspace PQ codebooks, meta_id-stamped."""
+    _write_stamped(
+        spark, path, "_codebooks",
+        [(s, int(cid), [float(x) for x in cv])
+         for s, book in enumerate(codebooks) for cid, cv in book],
+        "s int, cid long, cv array<double>", meta_id,
+    )
+
+
+def read_codebooks(spark: SparkSession, path: str, meta_id: str,
+                   kind: str = "pq index"):
+    """The committed generation's codebooks: one sorted (cid, cv) list
+    per subspace, in subspace order."""
+    by_s: "dict[int, list]" = {}
+    for r in _read_stamped(spark, path, "_codebooks", meta_id, kind):
+        by_s.setdefault(int(r.s), []).append((int(r.cid), list(r.cv)))
+    return [sorted(by_s[s]) for s in sorted(by_s)]
 
 
 # ---------------------------------------------------------------------------
@@ -524,6 +584,21 @@ def read_centroids(
 
 def _rel_root(path: str, rel: str) -> str:
     return f"{path}/{rel}" if rel else path
+
+
+def segment_dir(path: str, rel: str, seg: str) -> str:
+    """THE segment directory name: `<path>/<rel>/seg=<id>` (rel "" =
+    the store root)."""
+    return f"{_rel_root(path, rel)}/seg={seg}"
+
+
+def read_segment(
+    spark: SparkSession, path: str, rel: str, seg: str
+) -> DataFrame:
+    """One relation of ONE just-written segment (the store's own
+    partition column kept) — how a build/extend/compaction derives
+    statistics from exactly the rows it stored."""
+    return spark.read.parquet(segment_dir(path, rel, seg))
 
 
 def write_segment(
@@ -538,7 +613,7 @@ def write_segment(
     column BEFORE partitionBy (the round-7 lesson: unaligned writers
     emit tasks x buckets sliver files); key-less relations (BM25
     _stats) coalesce to one file."""
-    target = f"{_rel_root(path, rel)}/seg={seg}"
+    target = segment_dir(path, rel, seg)
     if partition_col is None:
         df.coalesce(1).write.mode("overwrite").parquet(target)
     else:
@@ -559,18 +634,17 @@ def read_committed(
     rebuild's orphans may carry a different schema (vec vs scale+qvec),
     and a root-scan-then-filter read could sample an orphan's footer
     first."""
-    root = _rel_root(path, rel)
     # the caller passes DATA segments only (committed_state excludes
     # manifest-flagged tombstone-only segments), so every listed dir
     # must exist: a missing one is corruption (bad vacuum, foreign
     # delete) and Spark fails LOUDLY on it — no silent row loss, and
     # no local-filesystem probing that an object-store path would
     # defeat
-    dirs = [f"{root}/seg={s}" for s in segments]
     from ..sources.files import read_parquet
 
     return read_parquet(
-        spark, *dirs, options={"basePath": root}
+        spark, *[segment_dir(path, rel, s) for s in segments],
+        options={"basePath": _rel_root(path, rel)},
     ).drop("seg")
 
 
@@ -615,15 +689,11 @@ def delete_from_index(
     EMPTY (a takedown filter that matched nothing must not tax every
     future probe with a pointless tombstone scan) or when the tag is
     already committed."""
-    spark = ids.sparkSession
-    rows = sidecar_rows(spark, path + "/_meta")
-    if len(rows) != 1:
-        raise ValueError(
-            f"corrupt index at {path}: _meta has {len(rows)} rows"
-        )
-    meta_id = getattr(rows[0], "meta_id", None)
-    _, man = read_manifest(path, store)
-    if tag is not None and tag in (man.get("tags") or {}):
+    _ensure_specs()
+    meta, _, tags, _ = committed_state(
+        ids.sparkSession, path, COMPACT_SPECS, store=store
+    )
+    if tag is not None and tag in tags:
         return False
     tombstones = ids.select(F.col(id_col).alias("id")).distinct()
     if tombstones.isEmpty():
@@ -631,7 +701,7 @@ def delete_from_index(
     seg = new_segment_id()
     write_segment(tombstones, path, "_deletes", seg, None)
     return commit_extend(
-        path, seg, meta_id, tag=tag, store=store, tombstone=True
+        path, seg, meta.meta_id, tag=tag, store=store, tombstone=True
     )
 
 
@@ -646,14 +716,9 @@ def read_deletes(
     tomb = list(manifest.get("tombstones") or [])
     if not tomb:
         return None
-    root = _rel_root(path, "_deletes")
-    dirs = [f"{root}/seg={s}" for s in tomb]
-    from ..sources.files import read_parquet
-
-    return (
-        read_parquet(spark, *dirs, options={"basePath": root})
-        .drop("seg").select("id").distinct()
-    )
+    return read_committed(spark, path, "_deletes", tomb).select(
+        "id"
+    ).distinct()
 
 
 def apply_deletes(
@@ -707,29 +772,14 @@ def compact_index(
     <= 1 segment and no tombstones — nothing to do). Old segment dirs
     become invisible orphans: vacuum_index reclaims the space."""
     _ensure_specs()
-    rows = sidecar_rows(spark, path + "/_meta")
-    if len(rows) != 1:
-        raise ValueError(f"corrupt index at {path}: _meta has {len(rows)} rows")
-    meta = rows[0]
-    spec = COMPACT_SPECS.get(getattr(meta, "layout", None))
-    if spec is None:
-        raise ValueError(
-            f"index at {path} has layout {getattr(meta, 'layout', None)!r} "
-            f"— not a segment-manifest store this code can compact"
-        )
-    meta_id = getattr(meta, "meta_id", None)
-    version, man = read_manifest(path, store)
-    if man.get("meta_id") != meta_id:
-        raise ValueError(
-            f"index at {path} is torn (see committed_state) — re-run "
-            f"the build before compacting"
-        )
+    meta, data_segs, _, man = committed_state(
+        spark, path, COMPACT_SPECS, store=store
+    )
+    spec = COMPACT_SPECS[meta.layout]
     segs = list(man["segments"])
-    tomb = set(man.get("tombstones") or [])
-    data_segs = [s for s in segs if s not in tomb]
     deletes = read_deletes(spark, path, man)
     if len(segs) <= 1 and deletes is None:
-        return version
+        return int(man["version"])
     new_seg = new_segment_id()
     filtered: "dict[str, DataFrame]" = {}
     persisted: "list[DataFrame]" = []
@@ -769,15 +819,13 @@ def compact_index(
         # pattern): counts exactly what was stored, and the expensive
         # filtered scans run zero additional times
         written = {
-            rel: spark.read.parquet(
-                f"{_rel_root(path, rel)}/seg={new_seg}"
-            )
+            rel: read_segment(spark, path, rel, new_seg)
             for rel, _, _ in spec["rels"]
         }
         for rel, df in finalize(written).items():
             pcol = dict(spec.get("derived") or []).get(rel)
             write_segment(df, path, rel, new_seg, pcol)
-    return commit_replace(path, new_seg, segs, meta_id, store=store)
+    return commit_replace(path, new_seg, segs, meta.meta_id, store=store)
 
 
 def vacuum_index(
@@ -800,6 +848,13 @@ def vacuum_index(
     — vacuum is the time-travel horizon, exactly Delta's VACUUM bound;
     a vacuumed snapshot read fails loudly on the missing directory.
     Returns the removed dirs.
+
+    Refuses (NotImplementedError, before reading or pruning anything)
+    a path outside the local filesystem: the segment walk lists local
+    directories, so on an object store it would find no orphan while
+    `manifest_keep_last` still pruned the log — a vacuum that reports
+    success and reclaims nothing (txlog.vacuum_gold_tx refuses the same
+    way).
 
     Refuses a store with NO committed manifest: an empty `live` set
     there almost certainly means the manifests are elsewhere (wrong
@@ -825,6 +880,14 @@ def vacuum_index(
     import shutil
     import time
 
+    local = _local_fs_path(path)
+    if local is None:
+        raise NotImplementedError(
+            f"vacuum_index walks local segment directories; {path!r} is "
+            f"not a local path, so it would remove no segment while "
+            f"still pruning the manifest log — vacuum it with the "
+            f"object store's own lifecycle tooling"
+        )
     _ensure_specs()
     # layout from _meta read as plain json-less parquet is overkill
     # driver-side; glob every rel the specs know plus the root
@@ -837,12 +900,12 @@ def vacuum_index(
         )
     live = set(man["segments"])
     removed: "list[str]" = []
-    rel_roots = {path, _rel_root(path, "_deletes")}
+    rel_roots = {local, _rel_root(local, "_deletes")}
     for spec in COMPACT_SPECS.values():
         for rel, _, _ in spec["rels"]:
-            rel_roots.add(_rel_root(path, rel))
+            rel_roots.add(_rel_root(local, rel))
         for rel, _ in spec.get("derived") or []:
-            rel_roots.add(_rel_root(path, rel))
+            rel_roots.add(_rel_root(local, rel))
     now = time.time()
     for root in sorted(rel_roots):
         if not os.path.isdir(root):
@@ -944,6 +1007,12 @@ def maintain_index(
     )
     vacuumed = 0
     if fire:
+        if _local_fs_path(path) is None:
+            # refuse BEFORE compacting: vacuum_index would refuse after
+            raise NotImplementedError(
+                f"maintain_index compacts and then vacuums; {path!r} "
+                f"is not a local path, which vacuum_index refuses"
+            )
         version = compact_index(spark, path, store=store)
         vacuumed = len(vacuum_index(
             path, retention_s=retention_s, store=store,

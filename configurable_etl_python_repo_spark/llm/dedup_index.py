@@ -44,6 +44,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from . import _store as ST
 from .dedup import (
     _jaccard_from_arrays,
     _scope_cache,
@@ -86,20 +87,6 @@ def _ab_col(id_expr, buckets: int):
     from .sampling import md5_mod
 
     return md5_mod(id_expr.cast("string"), buckets).alias("ab")
-
-
-def _committed(spark: SparkSession, path: str, layout: str = None,
-               version: "int | None" = None):
-    """(meta, committed segments, tags, manifest) with the layout +
-    torn-rebuild guards applied — every probe/extend's first call.
-    `version` pins an explicit manifest snapshot (time travel within
-    the current build generation; see _store.committed_state)."""
-    from ._store import committed_state
-
-    return committed_state(
-        spark, path, layout or _LAYOUT, kind="signature index",
-        version=version,
-    )
 
 
 def _batch_buckets(
@@ -153,8 +140,6 @@ def minhash_build_index(
     seg=<id> directory pair, and the manifest commit (the txlog
     create-if-absent protocol, _store.py) makes both visible at once —
     a crashed or concurrent rebuild is invisible, never torn."""
-    from . import _store as ST
-
     if key_buckets < 1:
         raise ValueError(f"key_buckets must be >= 1, got {key_buckets}")
     sig = _scope_cache(
@@ -169,13 +154,12 @@ def minhash_build_index(
         sig.select("id", "arr", _ab_col(F.col("id"), key_buckets)),
         path, "arrays", seg, "ab",
     )
-    spark = corpus.sparkSession
-    spark.createDataFrame(
-        [(n, bands, rows_per_band, key_buckets, _LAYOUT, meta_id)],
+    ST.commit_build(
+        corpus.sparkSession, path, seg, meta_id,
+        (n, bands, rows_per_band, key_buckets, _LAYOUT, meta_id),
         "n int, bands int, rows_per_band int, key_buckets int, "
         "layout string, meta_id string",
-    ).coalesce(1).write.mode("overwrite").parquet(path + "/_meta")
-    ST.commit_build(path, seg, meta_id)
+    )
 
 
 def minhash_extend_index(
@@ -198,10 +182,9 @@ def minhash_extend_index(
     cannot double-append. Pass `tag` (e.g. a streaming batch id) for
     retry IDEMPOTENCE: if that tag already committed, nothing is
     published and False is returned."""
-    from . import _store as ST
-
-    spark = batch.sparkSession
-    meta, _, tags, _ = _committed(spark, path)
+    meta, _, tags, _ = ST.committed_state(
+        batch.sparkSession, path, (_LAYOUT,), kind="signature index"
+    )
     if tag is not None and tag in tags:
         return False
     sig, buckets = _batch_buckets(batch, id_col, text_col, meta)
@@ -259,9 +242,10 @@ def dedup_against_index(
     extends/deletes/compactions within the build generation, valid
     until vacuum_index removes the superseded segments (see
     _store.committed_state)."""
-    from ._store import apply_deletes, read_committed, read_deletes
-
-    meta, segs, _, man = _committed(spark, path, version=as_of_version)
+    meta, segs, _, man = ST.committed_state(
+        spark, path, (_LAYOUT,), kind="signature index",
+        version=as_of_version,
+    )
     sig, b_buckets = _batch_buckets(batch, id_col, text_col, meta)
     # constant-bounded probe set (<= key_buckets values): the only
     # driver-side materialization in the pipeline, same trick as
@@ -270,9 +254,9 @@ def dedup_against_index(
         r[0] for r in b_buckets.select("kb").distinct().collect()
     )
     idx = (
-        apply_deletes(
-            read_committed(spark, path, "buckets", segs),
-            read_deletes(spark, path, man), "id",
+        ST.apply_deletes(
+            ST.read_committed(spark, path, "buckets", segs),
+            ST.read_deletes(spark, path, man), "id",
         )
         .where(F.col("kb").isin(probed))
         .withColumnsRenamed({"id": "__idx_id"})
@@ -303,7 +287,7 @@ def dedup_against_index(
         r[0] for r in cand.select(ab).distinct().collect()
     )
     idx_arrays = (
-        read_committed(spark, path, "arrays", segs)
+        ST.read_committed(spark, path, "arrays", segs)
         .where(F.col("ab").isin(probed_ab))
         .select("id", "arr")
     )
@@ -348,21 +332,18 @@ def simhash_build_index(
         raise ValueError(
             f"max_hamming must be in [0, 15], got {max_hamming}"
         )
-    from . import _store as ST
-
     fp = simhash64(corpus, id_col, text_col)
     rows = simhash_band_rows(fp, max_hamming).withColumn(
         "kb", _kb_col(key_buckets)
     )
     seg, meta_id = ST.new_segment_id(), ST.new_meta_id()
     ST.write_segment(rows, path, "bands", seg, "kb")
-    spark = corpus.sparkSession
-    spark.createDataFrame(
-        [(max_hamming, key_buckets, _SH_LAYOUT, meta_id)],
+    ST.commit_build(
+        corpus.sparkSession, path, seg, meta_id,
+        (max_hamming, key_buckets, _SH_LAYOUT, meta_id),
         "max_hamming int, key_buckets int, layout string, "
         "meta_id string",
-    ).coalesce(1).write.mode("overwrite").parquet(path + "/_meta")
-    ST.commit_build(path, seg, meta_id)
+    )
 
 
 def simhash_extend_index(
@@ -377,11 +358,11 @@ def simhash_extend_index(
     tests as probe(index(A) extended with B) == probe(index(A ∪ B)).
     ATOMIC via the segment-manifest commit (_store.py); `tag` gives
     retry idempotence (returns False if already committed)."""
-    from . import _store as ST
     from .dedup import simhash64, simhash_band_rows
 
-    spark = batch.sparkSession
-    meta, _, tags, _ = _committed(spark, path, _SH_LAYOUT)
+    meta, _, tags, _ = ST.committed_state(
+        batch.sparkSession, path, (_SH_LAYOUT,), kind="signature index"
+    )
     if tag is not None and tag in tags:
         return False
     fp = simhash64(batch, id_col, text_col)
@@ -414,11 +395,11 @@ def simhash_against_index(
     and fingerprints are never recomputed, and no second store is
     touched. Output: (id_a batch, id_b index, hamming). Tombstoned ids
     never appear as id_b."""
-    from ._store import apply_deletes, read_committed, read_deletes
     from .dedup import simhash64, simhash_band_rows, simhash_distance
 
-    meta, segs, _, man = _committed(
-        spark, path, _SH_LAYOUT, version=as_of_version
+    meta, segs, _, man = ST.committed_state(
+        spark, path, (_SH_LAYOUT,), kind="signature index",
+        version=as_of_version,
     )
     k = int(meta.max_hamming)
     fp = _scope_cache(simhash64(batch, id_col, text_col))
@@ -429,9 +410,9 @@ def simhash_against_index(
         r[0] for r in b_rows.select("kb").distinct().collect()
     )
     idx = (
-        apply_deletes(
-            read_committed(spark, path, "bands", segs),
-            read_deletes(spark, path, man), "id",
+        ST.apply_deletes(
+            ST.read_committed(spark, path, "bands", segs),
+            ST.read_deletes(spark, path, man), "id",
         )
         .where(F.col("kb").isin(probed))
         .select("id", "sh_hi", "sh_lo", "band", "key")
@@ -501,6 +482,9 @@ def _emb_rows(batch, centroids, id_col, vec_col, quantize: bool):
 
 
 _EMB_PQ_LAYOUT = "emb-pq-cid-seg-v1"
+
+#: the layouts the embedding probe/extend read (dispatch on meta.layout)
+_EMB_LAYOUTS = (_EMB_LAYOUT, _EMB_PQ_LAYOUT)
 
 #: probe-side slack added to the per-row err bound before the ADC
 #: shortlist comparison. It covers the QUERY-side rounding the stored
@@ -616,33 +600,6 @@ def _emb_pq_rows(batch, centroids, codebooks, dim, id_col, vec_col):
     )
 
 
-def _emb_committed(spark: SparkSession, path: str,
-                   version: "int | None" = None):
-    """_committed with the embedding-store LAYOUT DISPATCH: peek the
-    _meta layout stamp and validate against whichever of the two
-    embedding layouts (exact/int8 vs pq-coded) the tree was built
-    under; any OTHER layout still dies on the strict single-layout
-    guard with the canonical rebuild message."""
-    from pyspark.errors import AnalysisException
-
-    from ._store import sidecar_rows
-
-    try:
-        rows = sidecar_rows(spark, path + "/_meta")
-        peek = getattr(rows[0], "layout", None) if len(rows) == 1 else None
-    except AnalysisException:
-        # ONLY the missing/unreadable-as-parquet path falls back to the
-        # default layout (and then dies on _committed's canonical
-        # rebuild message if the tree really is broken). Transient IO/
-        # permission errors must PROPAGATE — a bare except here turned
-        # a flaky read of a healthy pq store into the misleading
-        # 'wrong layout / rebuild' error (r12 ADVICE finding).
-        peek = None
-    lay = peek if peek == _EMB_PQ_LAYOUT else _EMB_LAYOUT
-    meta, segs, tags, man = _committed(spark, path, lay, version=version)
-    return lay, meta, segs, tags, man
-
-
 def embedding_build_index(
     corpus: DataFrame,
     path: str,
@@ -719,7 +676,6 @@ def embedding_build_index(
     execution); extension surface, same rationale as the MinHash index."""
     import math
 
-    from . import _store as ST
     from .similarity import _hash_order_sample
 
     modes = {False: "exact", True: "int8", "exact": "exact",
@@ -749,56 +705,38 @@ def embedding_build_index(
     spark = corpus.sparkSession
     seg, meta_id = ST.new_segment_id(), ST.new_meta_id()
     if mode == "pq":
-        from .similarity import _write_codebooks, pq_train
+        from .similarity import pq_train
 
         dim = corpus.select(F.size(vec_col)).first()[0]
         codebooks = pq_train(corpus, int(dim), m_subspaces, n_codes,
                              pq_n_iter, id_col, vec_col)
         rows = _emb_pq_rows(corpus, cents, codebooks, int(dim),
                             id_col, vec_col)
-        ST.write_segment(rows, path, "vectors", seg, "cid")
-        ST.write_centroids(spark, path, cents, meta_id)
-        _write_codebooks(spark, path, codebooks, meta_id)
-        spark.createDataFrame(
-            [(len(cents), _EMB_PQ_LAYOUT, meta_id,
-              int(target_list_size), int(m_subspaces), int(n_codes),
-              int(dim))],
-            "n_centroids int, layout string, meta_id string, "
-            "target_list_size int, m_subspaces int, n_codes int, "
-            "dim int",
-        ).coalesce(1).write.mode("overwrite").parquet(path + "/_meta")
-        n_rows = spark.read.parquet(
-            f"{ST._rel_root(path, 'vectors')}/seg={seg}"
-        ).count()
-        ST.commit_build(path, seg, meta_id, row_count=n_rows)
-        return
-    rows = _emb_rows(corpus, cents, id_col, vec_col, mode == "int8")
+        meta_row = (len(cents), _EMB_PQ_LAYOUT, meta_id,
+                    int(target_list_size), int(m_subspaces), int(n_codes),
+                    int(dim))
+        meta_ddl = ("n_centroids int, layout string, meta_id string, "
+                    "target_list_size int, m_subspaces int, n_codes int, "
+                    "dim int")
+    else:
+        rows = _emb_rows(corpus, cents, id_col, vec_col, mode == "int8")
+        # target_list_size rides _meta so the extend-time drift warning
+        # compares against the bound THIS build was sized for (an
+        # explicit n_centroids pin still records the caller's intended
+        # list size); additive column — pre-r11 stores read it as absent
+        meta_row = (len(cents), mode == "int8", _EMB_LAYOUT, meta_id,
+                    int(target_list_size))
+        meta_ddl = ("n_centroids int, quantize boolean, layout string, "
+                    "meta_id string, target_list_size int")
     ST.write_segment(rows, path, "vectors", seg, "cid")
     ST.write_centroids(spark, path, cents, meta_id)
-    # target_list_size rides _meta so the extend-time drift warning
-    # compares against the bound THIS build was sized for (an explicit
-    # n_centroids pin still records the caller's intended list size);
-    # additive column — pre-r11 stores read it as absent
-    spark.createDataFrame(
-        [(len(cents), mode == "int8", _EMB_LAYOUT, meta_id,
-          int(target_list_size))],
-        "n_centroids int, quantize boolean, layout string, "
-        "meta_id string, target_list_size int",
-    ).coalesce(1).write.mode("overwrite").parquet(path + "/_meta")
+    if mode == "pq":
+        ST.write_codebooks(spark, path, codebooks, meta_id)
     # manifest-carried row count: O(1) reads for the drift policy (one
     # metadata-only footer count of the just-written segment)
-    n_rows = spark.read.parquet(
-        f"{ST._rel_root(path, 'vectors')}/seg={seg}"
-    ).count()
-    ST.commit_build(path, seg, meta_id, row_count=n_rows)
-
-
-def _stored_centroids(spark: SparkSession, path: str, meta_id: str):
-    from ._store import read_centroids
-
-    return read_centroids(
-        spark, path, meta_id, kind="embedding index"
-    )
+    n_rows = ST.read_segment(spark, path, "vectors", seg).count()
+    ST.commit_build(spark, path, seg, meta_id, meta_row, meta_ddl,
+                    row_count=n_rows)
 
 
 def embedding_extend_index(
@@ -810,8 +748,9 @@ def embedding_extend_index(
     warn_list_size_factor: "float | None" = 4.0,
 ) -> bool:
     """Roll the embedding index forward: assign the batch under the
-    index's OWN stored centroids and quantization mode (read back —
-    callers cannot desynchronize either) and commit a new segment.
+    index's OWN stored centroids and storage layout (exact/int8 vs
+    pq, dispatched on the one committed_state read of _meta — callers
+    cannot desynchronize either) and commit a new segment.
     Pruning and probe semantics after an extend are identical to a
     fresh build over the union with the original centroid sample
     (pytest-pinned). ATOMIC via the segment-manifest commit
@@ -834,10 +773,10 @@ def embedding_extend_index(
     exactly when the store has few segments. Tombstoned-but-unpurged
     rows still count (the heuristic measures list size, which deletes
     don't shrink until compaction). None disables the check."""
-    from . import _store as ST
-
     spark = batch.sparkSession
-    lay, meta, segs, tags, man = _emb_committed(spark, path)
+    meta, segs, tags, man = ST.committed_state(
+        spark, path, _EMB_LAYOUTS, kind="embedding index"
+    )
     if tag is not None and tag in tags:
         return False
     if batch.isEmpty():
@@ -845,11 +784,13 @@ def embedding_extend_index(
         # nothing (an empty segment would also break the footer count —
         # a 0-row partitioned write emits no parquet files to read)
         return False
-    cents = _stored_centroids(spark, path, meta.meta_id)
-    if lay == _EMB_PQ_LAYOUT:
-        from .similarity import _read_codebooks
-
-        codebooks = _read_codebooks(spark, path, meta.meta_id)
+    cents = ST.read_centroids(
+        spark, path, meta.meta_id, kind="embedding index"
+    )
+    if meta.layout == _EMB_PQ_LAYOUT:
+        codebooks = ST.read_codebooks(
+            spark, path, meta.meta_id, kind="embedding index"
+        )
         rows = _emb_pq_rows(batch, cents, codebooks, int(meta.dim),
                             id_col, vec_col)
     else:
@@ -857,9 +798,7 @@ def embedding_extend_index(
                          bool(meta.quantize))
     seg = ST.new_segment_id()
     ST.write_segment(rows, path, "vectors", seg, "cid")
-    seg_rows = spark.read.parquet(
-        f"{ST._rel_root(path, 'vectors')}/seg={seg}"
-    ).count()
+    seg_rows = ST.read_segment(spark, path, "vectors", seg).count()
     committed = ST.commit_extend(
         path, seg, meta.meta_id, tag=tag, row_count=seg_rows
     )
@@ -869,9 +808,7 @@ def embedding_extend_index(
         missing = [s for s in segs if s not in counts]
         total = sum(counts.get(s, 0) for s in segs + [seg])
         if missing:
-            from ._store import read_committed
-
-            total += read_committed(
+            total += ST.read_committed(
                 spark, path, "vectors", missing
             ).count()
         target = getattr(meta, "target_list_size", None)
@@ -944,12 +881,7 @@ def _emb_pq_probe(spark, path, meta, stored, q, threshold,
     import numpy as np
     import pandas as pd
 
-    from .similarity import (
-        _read_codebooks,
-        _round_half_away,
-        _sim,
-        _with_norm,
-    )
+    from .similarity import _round_half_away, _sim, _with_norm
 
     # Enforce the docstring's precondition instead of trusting it: at
     # round_digits < 4 the query-side LUT rounding (m terms at
@@ -965,7 +897,9 @@ def _emb_pq_probe(spark, path, meta, stored, q, threshold,
             f"and the superset guarantee breaks (got {round_digits})"
         )
 
-    codebooks = _read_codebooks(spark, path, meta.meta_id)
+    codebooks = ST.read_codebooks(
+        spark, path, meta.meta_id, kind="embedding index"
+    )
     dim, m = int(meta.dim), int(meta.m_subspaces)
     sd = dim // m
     k = len(codebooks[0])
@@ -1104,14 +1038,15 @@ def embedding_against_index(
     bounded by the build policy's list size plus batch/n_splits, and
     each (batch, indexed) pair is scored exactly once (an indexed
     vector lives in exactly ONE list). Tombstoned ids never appear as
-    id_b."""
-    from ._store import apply_deletes, read_committed, read_deletes
+    id_b. The store's layout (exact/int8 vs pq) comes from the one
+    committed_state read of _meta; the pq branch is _emb_pq_probe."""
     from .similarity import cogroup_pair_dots, ivf_assignments_arrow
 
-    lay, meta, segs, _, man = _emb_committed(
-        spark, path, version=as_of_version
+    meta, segs, _, man = ST.committed_state(
+        spark, path, _EMB_LAYOUTS, kind="embedding index",
+        version=as_of_version,
     )
-    if lay == _EMB_PQ_LAYOUT and int(round_digits) < 4:
+    if meta.layout == _EMB_PQ_LAYOUT and int(round_digits) < 4:
         # fail BEFORE the coarse-probe job runs — same contract as the
         # defense-in-depth guard inside _emb_pq_probe
         raise ValueError(
@@ -1119,7 +1054,9 @@ def embedding_against_index(
             "below that the LUT rounding exceeds the shortlist slack "
             f"and the superset guarantee breaks (got {round_digits})"
         )
-    cents = _stored_centroids(spark, path, meta.meta_id)
+    cents = ST.read_centroids(
+        spark, path, meta.meta_id, kind="embedding index"
+    )
     if not (1 <= n_probe <= len(cents)):
         raise ValueError(
             f"n_probe must be in [1, {len(cents)}], got {n_probe}"
@@ -1137,11 +1074,11 @@ def embedding_against_index(
     probed = sorted(
         int(r[0]) for r in q.select("cid").distinct().collect()
     )
-    stored = apply_deletes(
-        read_committed(spark, path, "vectors", segs),
-        read_deletes(spark, path, man), "id",
+    stored = ST.apply_deletes(
+        ST.read_committed(spark, path, "vectors", segs),
+        ST.read_deletes(spark, path, man), "id",
     ).where(F.col("cid").isin(probed))
-    if lay == _EMB_PQ_LAYOUT:
+    if meta.layout == _EMB_PQ_LAYOUT:
         return _emb_pq_probe(
             spark, path, meta, stored, q, threshold, round_digits
         )
@@ -1180,16 +1117,14 @@ def embedding_against_index(
 # lives in llm/search.py's finalize)
 # ---------------------------------------------------------------------------
 
-from . import _store as _ST  # noqa: E402
-
-_ST.COMPACT_SPECS[_LAYOUT] = {
+ST.COMPACT_SPECS[_LAYOUT] = {
     "rels": [("buckets", "kb", "id"), ("arrays", "ab", "id")],
     "derived": [], "finalize": None,
 }
-_ST.COMPACT_SPECS[_SH_LAYOUT] = {
+ST.COMPACT_SPECS[_SH_LAYOUT] = {
     "rels": [("bands", "kb", "id")], "derived": [], "finalize": None,
 }
-_ST.COMPACT_SPECS[_EMB_LAYOUT] = {
+ST.COMPACT_SPECS[_EMB_LAYOUT] = {
     "rels": [("vectors", "cid", "id")], "derived": [], "finalize": None,
 }
 # the PQ-coded store rewrites the same single primary relation — codes,
@@ -1197,6 +1132,6 @@ _ST.COMPACT_SPECS[_EMB_LAYOUT] = {
 # sidecars (_centroids/_codebooks) are compaction-invariant; one
 # registration inherits tombstones/snapshots/compact/vacuum/maintain
 # (the n9 precedent)
-_ST.COMPACT_SPECS[_EMB_PQ_LAYOUT] = {
+ST.COMPACT_SPECS[_EMB_PQ_LAYOUT] = {
     "rels": [("vectors", "cid", "id")], "derived": [], "finalize": None,
 }

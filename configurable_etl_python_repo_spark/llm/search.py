@@ -30,6 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from . import _store as ST
 from .dedup import _words
 
 
@@ -211,14 +212,6 @@ def _doclens(corpus: DataFrame, id_col: str, text_col: str,
     ).withColumn("db", md5_mod(F.col("id").cast("string"), term_buckets))
 
 
-def _bm25_committed(spark, path: str, version: "int | None" = None):
-    from ._store import committed_state
-
-    return committed_state(
-        spark, path, _BM25_LAYOUT, kind="bm25 index", version=version
-    )
-
-
 def _bm25_segment(
     corpus: DataFrame,
     id_col: str,
@@ -290,8 +283,6 @@ def bm25_build_index(
     segments (re-adding a doc id double-counts it, as in any inverted
     index without a delete log). The build commits all three relations
     ATOMICALLY (segment-manifest protocol, _store.py)."""
-    from . import _store as ST
-
     if term_buckets < 1:
         raise ValueError(
             f"term_buckets must be >= 1, got {term_buckets}"
@@ -316,7 +307,7 @@ def bm25_build_index(
     # read-back would include older segments) and counts from its own
     # persisted batch relation
     ST.write_segment(
-        spark.read.parquet(f"{path}/postings/seg={seg}")
+        ST.read_segment(spark, path, "postings", seg)
         .groupBy("w", "tb")
         .agg(F.count(F.lit(1)).cast("long").alias("df_t")),
         path, "df", seg, "tb",
@@ -330,11 +321,10 @@ def bm25_build_index(
         ),
         path, "_stats", seg, None,
     )
-    spark.createDataFrame(
-        [(term_buckets, _BM25_LAYOUT, meta_id)],
+    ST.commit_build(
+        spark, path, seg, meta_id, (term_buckets, _BM25_LAYOUT, meta_id),
         "term_buckets int, layout string, meta_id string",
-    ).coalesce(1).write.mode("overwrite").parquet(path + "/_meta")
-    ST.commit_build(path, seg, meta_id)
+    )
 
 
 def bm25_extend_index(
@@ -358,10 +348,10 @@ def bm25_extend_index(
     three segment dirs visible at once (a mid-extend crash leaves
     invisible orphans; a retry cannot double-append). Pass `tag` for
     retry idempotence — returns False if that tag already committed."""
-    from . import _store as ST
-
     spark = batch.sparkSession
-    meta, _, tags, _ = _bm25_committed(spark, path)
+    meta, _, tags, _ = ST.committed_state(
+        spark, path, (_BM25_LAYOUT,), kind="bm25 index"
+    )
     if tag is not None and tag in tags:
         return False
     postings, doclens, stats = _bm25_segment(
@@ -374,7 +364,7 @@ def bm25_extend_index(
     # would both pay a second batch pass and, for a
     # non-value-deterministic source, silently skew idf)
     ST.write_segment(
-        spark.read.parquet(f"{path}/postings/seg={seg}")
+        ST.read_segment(spark, path, "postings", seg)
         .groupBy("w", "tb")
         .agg(F.count(F.lit(1)).cast("long").alias("df_t")),
         path, "df", seg, "tb",
@@ -407,15 +397,14 @@ def bm25_search_index(
     until compact_index physically purges the rows — Lucene's
     deleted-docs-count-until-merge semantics, the honest contract when
     recomputing global stats per delete would rescan the corpus."""
-    from ._store import apply_deletes, read_committed, read_deletes
-
     if not (1 <= k):
         raise ValueError(f"k must be >= 1, got {k}")
     terms = sorted(set(query.lower().split()))
     if not terms:
         raise ValueError("query must contain at least one term")
-    meta, segs, _, man = _bm25_committed(
-        spark, path, version=as_of_version
+    meta, segs, _, man = ST.committed_state(
+        spark, path, (_BM25_LAYOUT,), kind="bm25 index",
+        version=as_of_version,
     )
     # the probe's bucket set, computed driver-side with the SAME md5
     # window _tb_col uses (hashlib.md5 == Spark md5; % of a non-negative
@@ -429,25 +418,25 @@ def bm25_search_index(
             for t in terms
         }
     )
-    tf = apply_deletes(
-        read_committed(spark, path, "postings", segs)
+    tf = ST.apply_deletes(
+        ST.read_committed(spark, path, "postings", segs)
         .where(F.col("tb").isin(buckets))
         .where(F.col("w").isin(terms))
         .select("id", "w", "tf", "dl"),
-        read_deletes(spark, path, man), "id",
+        ST.read_deletes(spark, path, man), "id",
     )
     # df/stats SUM across segments (the append-only extend design):
     # both aggregations are bounded — <= |terms| x segments df rows,
     # one stats row per segment
     dfreq = (
-        read_committed(spark, path, "df", segs)
+        ST.read_committed(spark, path, "df", segs)
         .where(F.col("tb").isin(buckets))
         .where(F.col("w").isin(terms))
         .groupBy("w")
         .agg(F.sum("df_t").cast("long").alias("df_t"))
     )
     sums = (
-        read_committed(spark, path, "_stats", segs)
+        ST.read_committed(spark, path, "_stats", segs)
         .agg(
             F.sum("n_docs").cast("long").alias("n_docs"),
             F.sum("total_dl").cast("long").alias("total_dl"),
@@ -456,7 +445,7 @@ def bm25_search_index(
     # one-row validation read (bounded: _stats is one row per segment):
     # an index built/extended over an EMPTY corpus has n_docs = 0, and
     # avgdl = total_dl/0 would NULL every score downstream — refuse it
-    # loudly instead, mirroring the _store.read_meta guard style
+    # loudly instead, mirroring the _store.committed_state guard style
     n_docs_row = sums.collect()[0]
     if not n_docs_row.n_docs:
         raise ValueError(
@@ -540,9 +529,6 @@ def rrf_fuse(
 # what a fresh build would have written. Postings rewrite verbatim.
 # ---------------------------------------------------------------------------
 
-from . import _store as _ST  # noqa: E402
-
-
 def _bm25_finalize(filtered: "dict[str, DataFrame]") -> "dict[str, DataFrame]":
     """Recompute the derived relations from the (delete-filtered)
     primaries: df from the surviving postings, _stats from the
@@ -560,7 +546,7 @@ def _bm25_finalize(filtered: "dict[str, DataFrame]") -> "dict[str, DataFrame]":
     return {"df": df, "_stats": stats}
 
 
-_ST.COMPACT_SPECS[_BM25_LAYOUT] = {
+ST.COMPACT_SPECS[_BM25_LAYOUT] = {
     "rels": [("postings", "tb", "id"), ("doclens", "db", "id")],
     "derived": [("df", "tb"), ("_stats", None)],
     "finalize": _bm25_finalize,

@@ -27,6 +27,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from . import _store as ST
+
 
 def _dot(a, b):
     """Dot product of two array<float> columns as double, via the
@@ -1385,8 +1387,6 @@ def ivf_build_index(
     meta_id cross-check raises) rather than readable; re-run to heal."""
     import math
 
-    from . import _store as ST
-
     if n_centroids is None:
         if target_list_size < 1:
             raise ValueError(
@@ -1399,12 +1399,12 @@ def ivf_build_index(
     ST.write_segment(rows, path, "", seg, "cid")
     spark = corpus.sparkSession
     ST.write_centroids(spark, path, centroids, meta_id)
-    spark.createDataFrame(
-        [(len(centroids), bool(quantize), id_col, _IVF_LAYOUT, meta_id)],
+    ST.commit_build(
+        spark, path, seg, meta_id,
+        (len(centroids), bool(quantize), id_col, _IVF_LAYOUT, meta_id),
         "n_centroids int, quantize boolean, id_col string, "
         "layout string, meta_id string",
-    ).coalesce(1).write.mode("overwrite").parquet(path + "/_meta")
-    ST.commit_build(path, seg, meta_id)
+    )
     return centroids
 
 
@@ -1414,14 +1414,6 @@ def ivf_build_index(
 #: stamped into _centroids rows so a torn/mid-probe-swapped quantizer
 #: fails loudly, _store.py); search/extend refuse other trees
 _IVF_LAYOUT = "ivf-cid-seg-v3"
-
-
-def _ivf_committed(spark, path: str, version: "int | None" = None):
-    from ._store import committed_state
-
-    return committed_state(
-        spark, path, _IVF_LAYOUT, kind="ivf index", version=version
-    )
 
 
 def _ivf_rows(
@@ -1466,10 +1458,10 @@ def ivf_extend_index(
     were present at build time. ATOMIC via the segment-manifest commit
     (_store.py); `tag` gives retry idempotence (returns False if
     already committed)."""
-    from . import _store as ST
-
     spark = batch.sparkSession
-    meta, _, tags, _ = _ivf_committed(spark, path)
+    meta, _, tags, _ = ST.committed_state(
+        spark, path, (_IVF_LAYOUT,), kind="ivf index"
+    )
     if tag is not None and tag in tags:
         return False
     centroids = ST.read_centroids(
@@ -1500,17 +1492,11 @@ def ivf_search_index(
     I/O scales with the probed fraction. Rerank is the exact cosine.
     Tombstoned ids (_store.delete_from_index) never appear as
     neighbors."""
-    from ._store import (
-        apply_deletes,
-        read_centroids,
-        read_committed,
-        read_deletes,
+    meta, segs, _, man = ST.committed_state(
+        spark, path, (_IVF_LAYOUT,), kind="ivf index",
+        version=as_of_version,
     )
-
-    meta, segs, _, man = _ivf_committed(
-        spark, path, version=as_of_version
-    )
-    centroids = read_centroids(
+    centroids = ST.read_centroids(
         spark, path, meta.meta_id, kind="ivf index"
     )
     probe = ivf_assignments_arrow(centroids, n_best=n_probe)
@@ -1524,9 +1510,9 @@ def ivf_search_index(
     })
     # partition filter: only committed segments' probed lists are ever
     # listed/read (crashed extends' orphans are invisible)
-    stored = apply_deletes(
-        read_committed(spark, path, "", segs),
-        read_deletes(spark, path, man), id_col,
+    stored = ST.apply_deletes(
+        ST.read_committed(spark, path, "", segs),
+        ST.read_deletes(spark, path, man), id_col,
     ).where(F.col("cid").isin(probed))
     # branch on the COMMITTED meta.quantize, never on schema sniffing:
     # orphan segments from a crashed opposite-mode rebuild can flip
@@ -1574,63 +1560,8 @@ def ivf_search_index(
 #: snapshot reads, compact/vacuum/maintain via COMPACT_SPECS.
 _PQ_LAYOUT = "pq-cid-seg-v1"
 _PQ_RES_LAYOUT = "pq-res-cid-seg-v1"
-
-
-def _pq_committed(spark, path: str, version: "int | None" = None):
-    """committed_state with the PQ-index LAYOUT DISPATCH (the
-    _emb_committed pattern): peek the _meta layout stamp and validate
-    against whichever of the two PQ layouts (global codebooks vs
-    residual-trained) the tree was built under; any OTHER layout still
-    dies on the strict single-layout guard. Only AnalysisException
-    (missing/unreadable-as-parquet) falls back — transient IO errors
-    propagate (the r12 ADVICE discipline). Returns (layout, meta,
-    segs, tags, manifest)."""
-    from pyspark.errors import AnalysisException
-
-    from ._store import committed_state, sidecar_rows
-
-    try:
-        rows = sidecar_rows(spark, path + "/_meta")
-        peek = getattr(rows[0], "layout", None) if len(rows) == 1 else None
-    except AnalysisException:
-        peek = None
-    lay = peek if peek == _PQ_RES_LAYOUT else _PQ_LAYOUT
-    meta, segs, tags, man = committed_state(
-        spark, path, lay, kind="pq index", version=version
-    )
-    return lay, meta, segs, tags, man
-
-
-def _write_codebooks(spark, path: str, codebooks, meta_id: str) -> None:
-    """Persist the per-subspace codebooks with the build's meta_id
-    stamped on every row — the _centroids convention, so a torn or
-    mid-probe-swapped rebuild fails loudly at read."""
-    rows = [
-        (s, int(cid), [float(x) for x in cv], meta_id)
-        for s, book in enumerate(codebooks)
-        for cid, cv in book
-    ]
-    spark.createDataFrame(
-        rows, "s int, cid long, cv array<double>, meta_id string"
-    ).coalesce(1).write.mode("overwrite").parquet(path + "/_codebooks")
-
-
-def _read_codebooks(spark, path: str, meta_id: str):
-    from ._store import sidecar_rows
-
-    rows = sidecar_rows(spark, path + "/_codebooks")
-    bad = {getattr(r, "meta_id", None) for r in rows} - {meta_id}
-    if bad:
-        raise ValueError(
-            f"pq index at {path} is torn: _codebooks generation(s) "
-            f"{sorted(map(repr, bad))} do not match the committed "
-            f"manifest's {meta_id!r} — a rebuild crashed or completed "
-            f"mid-read; re-run the build (or the probe)"
-        )
-    by_s: "dict[int, list]" = {}
-    for r in rows:
-        by_s.setdefault(int(r.s), []).append((int(r.cid), list(r.cv)))
-    return [sorted(by_s[s]) for s in sorted(by_s)]
+#: the layouts pq extend/search read (dispatch on meta.layout)
+_PQ_LAYOUTS = (_PQ_LAYOUT, _PQ_RES_LAYOUT)
 
 
 def _pq_rows(
@@ -1690,8 +1621,6 @@ def pq_build_index(
     detectably torn via meta_id, never silently mixed)."""
     import math
 
-    from . import _store as ST
-
     if n_centroids is None:
         if target_list_size < 1:
             raise ValueError(
@@ -1719,14 +1648,14 @@ def pq_build_index(
     ST.write_segment(rows, path, "", seg, "cid")
     spark = corpus.sparkSession
     ST.write_centroids(spark, path, coarse, meta_id)
-    _write_codebooks(spark, path, codebooks, meta_id)
-    spark.createDataFrame(
-        [(int(dim), int(m_subspaces), int(n_codes), len(coarse),
-          id_col, layout, meta_id)],
+    ST.write_codebooks(spark, path, codebooks, meta_id)
+    ST.commit_build(
+        spark, path, seg, meta_id,
+        (int(dim), int(m_subspaces), int(n_codes), len(coarse),
+         id_col, layout, meta_id),
         "dim int, m_subspaces int, n_codes int, n_centroids int, "
         "id_col string, layout string, meta_id string",
-    ).coalesce(1).write.mode("overwrite").parquet(path + "/_meta")
-    ST.commit_build(path, seg, meta_id)
+    )
 
 
 def pq_extend_index(
@@ -1738,20 +1667,21 @@ def pq_extend_index(
 ) -> bool:
     """Roll the PQ index forward: encode the batch under the index's
     OWN stored coarse centroids AND codebooks (read back with meta_id
-    cross-checks — callers cannot desynchronize either) and commit a
-    new segment. FAISS-add semantics: nothing retrains; a search after
+    cross-checks — callers cannot desynchronize either; the global vs
+    residual encoding dispatches on the committed meta.layout) and
+    commit a new segment. FAISS-add semantics: nothing retrains; a search after
     an extend equals a search against a fresh build whose TRAINING SET
     was the original corpus (pytest-pinned). ATOMIC via the
     segment-manifest commit; `tag` gives retry idempotence."""
-    from . import _store as ST
-
     spark = batch.sparkSession
-    lay, meta, _, tags, _ = _pq_committed(spark, path)
+    meta, _, tags, _ = ST.committed_state(
+        spark, path, _PQ_LAYOUTS, kind="pq index"
+    )
     if tag is not None and tag in tags:
         return False
     coarse = ST.read_centroids(spark, path, meta.meta_id, kind="pq index")
-    codebooks = _read_codebooks(spark, path, meta.meta_id)
-    if lay == _PQ_RES_LAYOUT:
+    codebooks = ST.read_codebooks(spark, path, meta.meta_id)
+    if meta.layout == _PQ_RES_LAYOUT:
         # a residual tree encodes batch RESIDUALS under its stored
         # codebooks — dispatch on the layout stamp, never a kwarg (a
         # caller cannot desynchronize the encoding from the build)
@@ -1785,7 +1715,8 @@ def pq_search_index(
     pq_topk contract (DECIMAL-summed terms, reconstruction-norm
     denominator, ties to the smaller id, self excluded). Tombstoned
     ids never appear; `as_of_version` time-travels the manifest log
-    like every other store.
+    like every other store. A residual tree (one committed_state read
+    of _meta, dispatched on meta.layout) scores through _pq_res_score.
 
     `round_digits` governs ALL query-side arithmetic — the coarse
     probe, the LUT terms, the codeword norms, and the final score
@@ -1793,18 +1724,11 @@ def pq_search_index(
     assignment is the index's own build-time contract (fixed 6dp in
     pq_build_index/_pq_rows) and is already frozen on disk — a
     search-side precision cannot and does not re-quantize it."""
-    from ._store import (
-        apply_deletes,
-        read_centroids,
-        read_committed,
-        read_deletes,
+    meta, segs, _, man = ST.committed_state(
+        spark, path, _PQ_LAYOUTS, kind="pq index", version=as_of_version
     )
-
-    lay, meta, segs, _, man = _pq_committed(
-        spark, path, version=as_of_version
-    )
-    coarse = read_centroids(spark, path, meta.meta_id, kind="pq index")
-    codebooks = _read_codebooks(spark, path, meta.meta_id)
+    coarse = ST.read_centroids(spark, path, meta.meta_id, kind="pq index")
+    codebooks = ST.read_codebooks(spark, path, meta.meta_id)
     dim, m = int(meta.dim), int(meta.m_subspaces)
     cb = F.broadcast(_pq_codebook_df(spark, codebooks, round_digits))
     probe = ivf_assignments_arrow(coarse, n_best=n_probe,
@@ -1818,11 +1742,11 @@ def pq_search_index(
     probed = sorted({
         int(r[0]) for r in qlists.select("cid").distinct().collect()
     })
-    stored = apply_deletes(
-        read_committed(spark, path, "", segs),
-        read_deletes(spark, path, man), "id",
+    stored = ST.apply_deletes(
+        ST.read_committed(spark, path, "", segs),
+        ST.read_deletes(spark, path, man), "id",
     ).where(F.col("cid").isin(probed))
-    if lay == _PQ_RES_LAYOUT:
+    if meta.layout == _PQ_RES_LAYOUT:
         # residual tree: hand the pruned code rows to the shared
         # residual scorer (the one ivf_pq_residual_topk runs) — same
         # probe digits, same tiebreaks, same DECIMAL folds; the cid
@@ -2185,8 +2109,6 @@ def semantic_dedup(
 # Compaction spec: the IVF store is one verbatim relation at the root
 # ---------------------------------------------------------------------------
 
-from . import _store as _ST  # noqa: E402
-
 
 def _ivf_id_col(df, meta) -> str:
     """The ANN store keeps the CALLER's id column name (ivf_search_index
@@ -2217,14 +2139,14 @@ def _ivf_id_col(df, meta) -> str:
     return candidates[0]
 
 
-_ST.COMPACT_SPECS[_IVF_LAYOUT] = {
+ST.COMPACT_SPECS[_IVF_LAYOUT] = {
     "rels": [("", "cid", _ivf_id_col)], "derived": [], "finalize": None,
 }
-_ST.COMPACT_SPECS[_PQ_LAYOUT] = {
+ST.COMPACT_SPECS[_PQ_LAYOUT] = {
     "rels": [("", "cid", "id")], "derived": [], "finalize": None,
 }
 # the residual tree's physical shape is identical (cid-partitioned code
 # rows; quantizer sidecars are rebuild-scoped, not compaction-scoped)
-_ST.COMPACT_SPECS[_PQ_RES_LAYOUT] = {
+ST.COMPACT_SPECS[_PQ_RES_LAYOUT] = {
     "rels": [("", "cid", "id")], "derived": [], "finalize": None,
 }

@@ -31,6 +31,16 @@ if TYPE_CHECKING:  # pragma: no cover
     from ..plans.compiler import Engine
 
 
+def _rename_args(kwargs: dict, renames: dict) -> dict:
+    """Rename config-facing arg names (id_column/text_column/...) to the
+    llm functions' parameter names, in place; returns `kwargs`. Each
+    adapter keeps its own rename table."""
+    for cfg, py in renames.items():
+        if cfg in kwargs:
+            kwargs[py] = kwargs.pop(cfg)
+    return kwargs
+
+
 def _unary(fn, **defaults):
     def compile_op(engine: "Engine", spec: OpSpec):
         df, _ = engine.peek(spec.inputs[0])
@@ -62,11 +72,10 @@ def _binary_corpus_target(fn_name: str):
         )
         from ..llm import sampling as M
 
-        kwargs = dict(spec.args)
-        for cfg, py in (("id_column", "id_col"), ("text_column", "text_col"),
-                        ("target_text_column", "target_text_col")):
-            if cfg in kwargs:
-                kwargs[py] = kwargs.pop(cfg)
+        kwargs = _rename_args(dict(spec.args), {
+            "id_column": "id_col", "text_column": "text_col",
+            "target_text_column": "target_text_col",
+        })
         return getattr(M, fn_name)(corpus, target, **kwargs), None
 
     return compile_op
@@ -77,10 +86,7 @@ def _rename_kw(fn, mapping):
     functions' parameter names."""
 
     def wrapped(df, **kwargs):
-        for cfg_name, py_name in mapping.items():
-            if cfg_name in kwargs:
-                kwargs[py_name] = kwargs.pop(cfg_name)
-        return fn(df, **kwargs)
+        return fn(df, **_rename_args(kwargs, mapping))
 
     return wrapped
 
@@ -104,11 +110,9 @@ def _decontaminate(fn):
     def compile_op(engine: "Engine", spec: OpSpec):
         corpus, _ = engine.peek(spec.inputs[0])
         evalset, _ = engine.peek(spec.inputs[1])
-        kwargs = dict(spec.args)
-        renames = {**_ID_TEXT, "eval_text_column": "eval_text_col"}
-        for cfg_name, py_name in renames.items():
-            if cfg_name in kwargs:
-                kwargs[py_name] = kwargs.pop(cfg_name)
+        kwargs = _rename_args(dict(spec.args), {
+            **_ID_TEXT, "eval_text_column": "eval_text_col"
+        })
         return fn(corpus, evalset, **kwargs), None
 
     return compile_op
@@ -155,10 +159,9 @@ def _pq_index_write(fn_name: str):
                 f"{spec.op} needs a 'path' arg naming the index location"
             )
         path = kwargs.pop("path")
-        for cfg, py in (("id_column", "id_col"),
-                        ("vector_column", "vec_col")):
-            if cfg in kwargs:
-                kwargs[py] = kwargs.pop(cfg)
+        _rename_args(kwargs, {
+            "id_column": "id_col", "vector_column": "vec_col",
+        })
         fn = getattr(S, fn_name)
         _validate_op_args(spec.op, fn, kwargs, n_supplied=2)
         fn(df, path, **kwargs)
@@ -178,9 +181,7 @@ def _pq_search_index(engine: "Engine", spec: OpSpec):
             "PQ SEARCH INDEX needs a 'path' arg naming the index"
         )
     path = kwargs.pop("path")
-    for cfg, py in (("id_column", "id_col"), ("vector_column", "vec_col")):
-        if cfg in kwargs:
-            kwargs[py] = kwargs.pop(cfg)
+    _rename_args(kwargs, {"id_column": "id_col", "vector_column": "vec_col"})
     _validate_op_args(spec.op, S.pq_search_index, kwargs, n_supplied=3)
     return S.pq_search_index(
         queries.sparkSession, path, queries, **kwargs
@@ -194,11 +195,9 @@ def _dedup_clusters(engine: "Engine", spec: OpSpec):
 
     docs, _ = engine.peek(spec.inputs[0])
     pairs, _ = engine.peek(spec.inputs[1])
-    kwargs = dict(spec.args)
-    if "id_column" in kwargs:
-        kwargs["id_col"] = kwargs.pop("id_column")
-    if "score_column" in kwargs:
-        kwargs["score_col"] = kwargs.pop("score_column")
+    kwargs = _rename_args(dict(spec.args), {
+        "id_column": "id_col", "score_column": "score_col"
+    })
     return C.dedup_clusters(docs, pairs, **kwargs), None
 
 
@@ -246,11 +245,10 @@ def _surprisal(engine: "Engine", spec: OpSpec):
     """SURPRISAL SCORE: unary scores a corpus against its own unigram
     LM; a second input names the reference corpus (Laplace-smoothed)."""
     df, _ = engine.peek(spec.inputs[0])
-    kwargs = dict(spec.args)
-    for cfg, py in (("id_column", "id_col"), ("text_column", "text_col"),
-                    ("lm_text_column", "lm_text_col")):
-        if cfg in kwargs:
-            kwargs[py] = kwargs.pop(cfg)
+    kwargs = _rename_args(dict(spec.args), {
+        "id_column": "id_col", "text_column": "text_col",
+        "lm_text_column": "lm_text_col",
+    })
     if len(spec.inputs) > 1:
         kwargs["lm_df"], _ = engine.peek(spec.inputs[1])
     return T.surprisal_score(df, **kwargs), None
@@ -264,11 +262,10 @@ def _backoff_surprisal(engine: "Engine", spec: OpSpec):
     if len(spec.inputs) < 2:
         raise ValueError("SURPRISAL BACKOFF needs [corpus, lm] inputs")
     lm, _ = engine.peek(spec.inputs[1])
-    kwargs = dict(spec.args)
-    for cfg, py in (("id_column", "id_col"), ("text_column", "text_col"),
-                    ("lm_text_column", "lm_text_col")):
-        if cfg in kwargs:
-            kwargs[py] = kwargs.pop(cfg)
+    kwargs = _rename_args(dict(spec.args), {
+        "id_column": "id_col", "text_column": "text_col",
+        "lm_text_column": "lm_text_col",
+    })
     return T.backoff_surprisal(df, lm, **kwargs), None
 
 
@@ -284,12 +281,10 @@ def _backoff_stream(engine: "Engine", spec: OpSpec):
             "naming the LM corpus"
         )
     lm_df, _ = engine.peek(spec.inputs[1])
-    kwargs = dict(spec.args)
-    for cfg, py in (("text_column", "text_col"),
-                    ("lm_text_column", "lm_text_col"),
-                    ("id_column", "id_col")):
-        if cfg in kwargs:
-            kwargs[py] = kwargs.pop(cfg)
+    kwargs = _rename_args(dict(spec.args), {
+        "text_column": "text_col", "lm_text_column": "lm_text_col",
+        "id_column": "id_col",
+    })
     table = T.backoff_lm_table(
         lm_df,
         id_col=kwargs.pop("id_col", "doc_id"),
@@ -316,11 +311,10 @@ def _minhash_index_write(fn_name: str):
                 f"{spec.op} needs a 'path' arg naming the index location"
             )
         path = kwargs.pop("path")
-        for cfg, py in (("id_column", "id_col"),
-                        ("text_column", "text_col"),
-                        ("vector_column", "vec_col")):
-            if cfg in kwargs:
-                kwargs[py] = kwargs.pop(cfg)
+        _rename_args(kwargs, {
+            "id_column": "id_col", "text_column": "text_col",
+            "vector_column": "vec_col",
+        })
         getattr(DI, fn_name)(df, path, **kwargs)
         return df, None
 
@@ -344,11 +338,10 @@ def _index_probe(fn_name: str):
                 f"{spec.op} needs a 'path' arg naming the index"
             )
         path = kwargs.pop("path")
-        for cfg, py in (("id_column", "id_col"),
-                        ("text_column", "text_col"),
-                        ("vector_column", "vec_col")):
-            if cfg in kwargs:
-                kwargs[py] = kwargs.pop(cfg)
+        _rename_args(kwargs, {
+            "id_column": "id_col", "text_column": "text_col",
+            "vector_column": "vec_col",
+        })
         probe = getattr(DI, fn_name)
         return probe(engine.spark, path, df, **kwargs), None
 
@@ -366,11 +359,9 @@ def _ppl_partition_stream(engine: "Engine", spec: OpSpec):
             "the cutoff table (see PERPLEXITY CUTOFFS)"
         )
     cuts, _ = engine.peek(spec.inputs[1])
-    kwargs = dict(spec.args)
-    for cfg, py in (("score_column", "score_col"),
-                    ("strata_column", "strata_col")):
-        if cfg in kwargs:
-            kwargs[py] = kwargs.pop(cfg)
+    kwargs = _rename_args(dict(spec.args), {
+        "score_column": "score_col", "strata_column": "strata_col",
+    })
     if "labels" in kwargs and kwargs["labels"] is not None:
         kwargs["labels"] = tuple(kwargs["labels"])
     return T.perplexity_partition_stream(df, cuts, **kwargs), None
@@ -384,10 +375,9 @@ def _rrf_fuse(engine: "Engine", spec: OpSpec):
     if not spec.inputs:
         raise ValueError("RRF FUSE needs at least one ranked input")
     rankings = [engine.peek(n)[0] for n in spec.inputs]
-    kwargs = dict(spec.args)
-    for cfg, py in (("id_column", "id_col"), ("rank_column", "rank_col")):
-        if cfg in kwargs:
-            kwargs[py] = kwargs.pop(cfg)
+    kwargs = _rename_args(dict(spec.args), {
+        "id_column": "id_col", "rank_column": "rank_col",
+    })
     return SR.rrf_fuse(rankings, **kwargs), None
 
 
@@ -399,9 +389,7 @@ def _merge_cms_op(engine: "Engine", spec: OpSpec):
     if not spec.inputs:
         raise ValueError("MERGE CMS needs at least one sketch input")
     sketches = [engine.peek(n)[0] for n in spec.inputs]
-    kwargs = dict(spec.args)
-    if "group_columns" in kwargs:
-        kwargs["group_cols"] = kwargs.pop("group_columns")
+    kwargs = _rename_args(dict(spec.args), {"group_columns": "group_cols"})
     return SK.merge_cms(*sketches, **kwargs), None
 
 
@@ -418,10 +406,9 @@ def _cms_estimate_op(engine: "Engine", spec: OpSpec):
         )
     sk, _ = engine.peek(spec.inputs[0])
     keys, _ = engine.peek(spec.inputs[1])
-    kwargs = dict(spec.args)
-    for cfg, py in (("columns", "cols"), ("group_columns", "group_cols")):
-        if cfg in kwargs:
-            kwargs[py] = kwargs.pop(cfg)
+    kwargs = _rename_args(dict(spec.args), {
+        "columns": "cols", "group_columns": "group_cols",
+    })
     return SK.cms_estimate(sk, keys, **kwargs), None
 
 
@@ -440,10 +427,9 @@ def _bm25_index_write(op_name: str, fn_name: str):
                 f"{op_name} needs a 'path' arg naming the index"
             )
         path = kwargs.pop("path")
-        for cfg, py in (("id_column", "id_col"),
-                        ("text_column", "text_col")):
-            if cfg in kwargs:
-                kwargs[py] = kwargs.pop(cfg)
+        _rename_args(kwargs, {
+            "id_column": "id_col", "text_column": "text_col",
+        })
         getattr(SR, fn_name)(df, path, **kwargs)
         return df, None
 
@@ -469,11 +455,10 @@ def _admit_against_index(engine: "Engine", spec: OpSpec):
             "ADMIT AGAINST INDEX needs a 'path' arg naming the index"
         )
     path = kwargs.pop("path")
-    for cfg, py in (("id_column", "id_col"),
-                    ("text_column", "text_col"),
-                    ("vector_column", "value_col")):
-        if cfg in kwargs:
-            kwargs[py] = kwargs.pop(cfg)
+    _rename_args(kwargs, {
+        "id_column": "id_col", "text_column": "text_col",
+        "vector_column": "value_col",
+    })
     return admit_against_index(engine.spark, path, df, **kwargs), None
 
 
@@ -495,8 +480,7 @@ def _delete_from_index(engine: "Engine", spec: OpSpec):
             "DELETE FROM INDEX needs a 'path' arg naming the index"
         )
     path = kwargs.pop("path")
-    if "id_column" in kwargs:
-        kwargs["id_col"] = kwargs.pop("id_column")
+    _rename_args(kwargs, {"id_column": "id_col"})
     delete_from_index(df, path, **kwargs)
     return df, None
 
@@ -599,8 +583,7 @@ def _bm25_search_index(engine: "Engine", spec: OpSpec):
             "BM25 SEARCH INDEX needs a 'path' arg naming the index"
         )
     path = kwargs.pop("path")
-    if "id_column" in kwargs:
-        kwargs["id_col"] = kwargs.pop("id_column")
+    _rename_args(kwargs, {"id_column": "id_col"})
     return SR.bm25_search_index(engine.spark, path, **kwargs), None
 
 
@@ -614,10 +597,9 @@ def _decontaminate_stream(engine: "Engine", spec: OpSpec):
     kwargs = dict(spec.args)
     # the SAME renames the batch DECONTAMINATE op accepts — a program
     # can move between the duals without touching its arg names
-    for cfg, py in (("text_column", "text_col"),
-                    ("eval_text_column", "eval_text_col")):
-        if cfg in kwargs:
-            kwargs[py] = kwargs.pop(cfg)
+    _rename_args(kwargs, {
+        "text_column": "text_col", "eval_text_column": "eval_text_col",
+    })
     if "eval_grams" in kwargs:
         if len(spec.inputs) > 1:
             raise ValueError(
@@ -653,10 +635,9 @@ def _surprisal_stream(engine: "Engine", spec: OpSpec):
     lm_df, _ = engine.peek(spec.inputs[1])
     kwargs = dict(spec.args)
     # same renames as batch SURPRISAL SCORE — duals share arg names
-    for cfg, py in (("text_column", "text_col"),
-                    ("lm_text_column", "lm_text_col")):
-        if cfg in kwargs:
-            kwargs[py] = kwargs.pop(cfg)
+    _rename_args(kwargs, {
+        "text_column": "text_col", "lm_text_column": "lm_text_col",
+    })
     table = T.surprisal_lm_table(
         lm_df,
         text_col=kwargs.pop("lm_text_col", kwargs.get("text_col", "text")),

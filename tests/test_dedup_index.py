@@ -677,21 +677,20 @@ def test_embedding_pq_store_err_bound_dominates(spark, sf_dir, tmp_path):
     import numpy as np
 
     from configurable_etl_python_repo_spark.llm._store import (
+        committed_state,
+        read_codebooks,
         read_committed,
     )
     from configurable_etl_python_repo_spark.llm.dedup_index import (
-        _emb_committed,
-    )
-    from configurable_etl_python_repo_spark.llm.similarity import (
-        _read_codebooks,
+        _EMB_LAYOUTS,
     )
 
     corpus, _ = _vec_corpus_and_batch(spark, sf_dir)
     idx = str(tmp_path / "pq")
     embedding_build_index(corpus.limit(300), idx, n_centroids=4,
                           quantize="pq", m_subspaces=8, n_codes=16)
-    _, meta, segs, _, _ = _emb_committed(spark, idx)
-    books = _read_codebooks(spark, idx, meta.meta_id)
+    meta, segs, _, _ = committed_state(spark, idx, _EMB_LAYOUTS)
+    books = read_codebooks(spark, idx, meta.meta_id)
     cb = [dict(b) for b in books]
     dim, m = int(meta.dim), int(meta.m_subspaces)
     sd = dim // m

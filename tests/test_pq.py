@@ -461,7 +461,7 @@ def test_pq_index_maintain_policy(spark, tmp_path):
     unchanged; under the thresholds it is a no-op."""
     from configurable_etl_python_repo_spark.llm import _store as ST
     from configurable_etl_python_repo_spark.llm.similarity import (
-        _pq_committed,
+        _PQ_LAYOUTS,
         pq_build_index,
         pq_extend_index,
         pq_search_index,
@@ -476,15 +476,15 @@ def test_pq_index_maintain_policy(spark, tmp_path):
         pq_extend_index(emb.where(f"vec_id % 4 = {r}"), p, tag=f"e{r}")
     before = {tuple(x) for x in
               pq_search_index(spark, p, q, k=3, n_probe=4).collect()}
-    _, _, segs, _, _ = _pq_committed(spark, p)
+    _, segs, _, _ = ST.committed_state(spark, p, _PQ_LAYOUTS)
     assert len(segs) == 4
     # below threshold: no-op
     ST.maintain_index(spark, p, max_segments=16, retention_s=0.0)
-    _, _, segs2, _, _ = _pq_committed(spark, p)
+    _, segs2, _, _ = ST.committed_state(spark, p, _PQ_LAYOUTS)
     assert len(segs2) == 4
     # over threshold: compacts to one segment, answers unchanged
     ST.maintain_index(spark, p, max_segments=3, retention_s=0.0)
-    _, _, segs3, _, _ = _pq_committed(spark, p)
+    _, segs3, _, _ = ST.committed_state(spark, p, _PQ_LAYOUTS)
     assert len(segs3) == 1
     after = {tuple(x) for x in
              pq_search_index(spark, p, q, k=3, n_probe=4).collect()}

@@ -10,8 +10,10 @@ invisible orphan; a crashed REbuild is detectably torn (sidecars are
 in-place), never silently probed; compaction that lost its snapshot
 refuses to publish instead of doubling rows."""
 
+import ast
 import glob
 import os
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -91,23 +93,24 @@ def _corpus_query(docs):
 def test_first_build_crash_before_commit_is_invisible_and_retryable(
     spark, sf_dir, tmp_path, monkeypatch
 ):
-    """A build killed between its segment writes and commit_build
-    leaves a tree NO reader accepts (loud 'no committed segments'),
-    and a straight retry on the same path succeeds."""
+    """A build killed between its segment + _meta writes and the
+    manifest publish (inside commit_build) leaves a tree NO reader
+    accepts (loud 'no committed segments'), and a straight retry on the
+    same path succeeds."""
     corpus = _docs(spark, sf_dir, 0, 30)
     batch = _docs(spark, sf_dir, 0, 10).select(
         (F.col("doc_id") + 1000000).alias("doc_id"), "text"
     )
     idx = str(tmp_path / "mh")
-    real = ST.commit_build
-    monkeypatch.setattr(ST, "commit_build", lambda *a, **k: (_ for _ in ()).throw(_Crash()))
+    real = logstore.publish
+    monkeypatch.setattr(logstore, "publish", lambda *a, **k: (_ for _ in ()).throw(_Crash()))
     with pytest.raises(_Crash):
         minhash_build_index(corpus, idx, **_LSH)
     # debris exists, but the store is refused loudly, not misread
     assert glob.glob(f"{idx}/buckets/seg=*")
     with pytest.raises(ValueError, match="no committed segments"):
         dedup_against_index(spark, idx, batch, threshold=_T)
-    monkeypatch.setattr(ST, "commit_build", real)
+    monkeypatch.setattr(logstore, "publish", real)
     minhash_build_index(corpus, idx, **_LSH)
     got = _probe_set(spark, idx, batch)
     assert {(d + 1000000, d) for d in range(0, 10, 2)} <= got
@@ -155,9 +158,10 @@ def test_extend_crash_before_commit_then_retry_minhash(
 def test_rebuild_crash_after_meta_is_detectably_torn_then_heals(
     spark, sf_dir, tmp_path, monkeypatch
 ):
-    """A REbuild killed between its sidecar (_meta) overwrite and
-    commit_build leaves the previous index TORN — probes refuse loudly
-    (meta_id cross-check) instead of probing new parameters against old
+    """A REbuild killed between its sidecar (_meta) overwrite and the
+    manifest publish (commit_build writes _meta, then publishes) leaves
+    the previous index TORN — probes refuse loudly (meta_id
+    cross-check) instead of probing new parameters against old
     segments — and re-running the build heals the store."""
     corpus = _docs(spark, sf_dir, 0, 30)
     batch = _docs(spark, sf_dir, 0, 10).select(
@@ -166,13 +170,13 @@ def test_rebuild_crash_after_meta_is_detectably_torn_then_heals(
     idx = str(tmp_path / "mh")
     minhash_build_index(corpus, idx, **_LSH)
 
-    real = ST.commit_build
-    monkeypatch.setattr(ST, "commit_build", lambda *a, **k: (_ for _ in ()).throw(_Crash()))
+    real = logstore.publish
+    monkeypatch.setattr(logstore, "publish", lambda *a, **k: (_ for _ in ()).throw(_Crash()))
     with pytest.raises(_Crash):
         minhash_build_index(corpus, idx, **_LSH)  # rebuild, same path
     with pytest.raises(ValueError, match="torn"):
         dedup_against_index(spark, idx, batch, threshold=_T)
-    monkeypatch.setattr(ST, "commit_build", real)
+    monkeypatch.setattr(logstore, "publish", real)
     minhash_build_index(corpus, idx, **_LSH)
     got = _probe_set(spark, idx, batch)
     assert {(d + 1000000, d) for d in range(0, 10, 2)} <= got
@@ -621,6 +625,139 @@ def test_vacuum_refuses_store_with_no_committed_manifest(tmp_path):
     with pytest.raises(ValueError, match="refusing to vacuum"):
         ST.vacuum_index(bogus, retention_s=0.0)
     assert os.path.isdir(os.path.join(bogus, "buckets", "seg=sdead"))
+
+
+_S3_INDEX = "s3a://idx-bucket/stores/mh"
+
+
+def _s3_index_log():
+    """A build, an extend and a compaction committed on an object-store
+    manifest log (the tests/test_txlog.py S3 stub): three manifests,
+    and no local directory anywhere."""
+    from test_txlog import _StubS3Client
+
+    client = _StubS3Client()
+    st = logstore.S3LogStore("idx-bucket", "stores/mh/_segments",
+                             client=client)
+    logstore.publish(st, 0, {"version": 1, "segments": ["sa"],
+                             "tags": {}, "meta_id": "m",
+                             "tombstones": []})
+    assert ST.commit_extend(_S3_INDEX, "sb", "m", store=st)
+    assert ST.commit_replace(_S3_INDEX, "sc", ["sa", "sb"], "m",
+                             store=st) == 3
+    return st, client
+
+
+def test_vacuum_and_maintain_refuse_object_store_paths():
+    """vacuum_index walks local segment dirs: on an object-store path it
+    would find no orphan yet still prune the manifest log and report
+    success. It refuses instead, and maintain_index refuses before it
+    compacts (it would vacuum next)."""
+    st, _ = _s3_index_log()
+    with pytest.raises(NotImplementedError):
+        ST.vacuum_index(_S3_INDEX, retention_s=0.0, store=st,
+                        manifest_keep_last=1)
+    with pytest.raises(NotImplementedError):
+        ST.maintain_index(None, _S3_INDEX, max_segments=1, store=st)
+
+
+def test_refused_object_store_vacuum_keeps_every_manifest():
+    st, client = _s3_index_log()
+    before = dict(client.blobs)
+    try:
+        ST.vacuum_index(_S3_INDEX, retention_s=0.0, store=st,
+                        manifest_keep_last=1)
+    except NotImplementedError:
+        pass
+    assert client.blobs == before
+    for v in (1, 2, 3):
+        assert ST.read_manifest(_S3_INDEX, st, version=v)[0] == v
+
+
+def test_probe_and_search_read_meta_once(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """committed_state reads _meta once and the caller dispatches on
+    meta.layout: a two-layout family (embedding int8/pq, pq/residual)
+    pays no second layout-peek read."""
+    from configurable_etl_python_repo_spark.llm.similarity import (
+        pq_build_index,
+        pq_search_index,
+    )
+
+    corpus = _vecs(spark, sf_dir, 0, 60)
+    batch = _vecs(spark, sf_dir, 60, 70)
+    emb, pq = str(tmp_path / "emb"), str(tmp_path / "pq")
+    embedding_build_index(corpus, emb, n_centroids=2, quantize="pq",
+                          m_subspaces=4, n_codes=4)
+    pq_build_index(corpus, pq, dim=64, m_subspaces=4, n_codes=4,
+                   n_centroids=2)
+    real, reads = ST.sidecar_rows, []
+
+    def counting(spark_, path):
+        reads.append(path)
+        return real(spark_, path)
+
+    monkeypatch.setattr(ST, "sidecar_rows", counting)
+    embedding_against_index(spark, emb, batch, threshold=0.5).collect()
+    assert sum(p.endswith("/_meta") for p in reads) == 1
+    reads.clear()
+    pq_search_index(spark, pq, batch, k=3, n_probe=2).collect()
+    assert sum(p.endswith("/_meta") for p in reads) == 1
+
+
+PKG = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+    "configurable_etl_python_repo_spark",
+)
+_STORE_PATH = re.compile(r"/_meta|/_centroids|/_codebooks|seg=")
+
+
+def _store_path_literals(path: str) -> "set[str]":
+    """The string constants (f-string parts included) of a module that
+    spell a sidecar path or the segment directory name. Docstrings and
+    comments do not count."""
+    with open(path) as f:
+        tree = ast.parse(f.read(), path)
+    docs = {
+        id(n.body[0].value) for n in ast.walk(tree)
+        if isinstance(n, (ast.Module, ast.ClassDef, ast.FunctionDef,
+                          ast.AsyncFunctionDef))
+        and n.body and isinstance(n.body[0], ast.Expr)
+        and isinstance(n.body[0].value, ast.Constant)
+    }
+    return {
+        n.value for n in ast.walk(tree)
+        if isinstance(n, ast.Constant) and isinstance(n.value, str)
+        and id(n) not in docs and _STORE_PATH.search(n.value)
+    }
+
+
+def test_store_paths_spelled_in_one_module():
+    """Sidecar paths and `seg=` directories live in llm/_store.py only:
+    a family that formats its own is a second storage layout that can
+    drift from the protocol's."""
+    where = sorted(
+        os.path.relpath(path, PKG)
+        for path in glob.glob(os.path.join(PKG, "**", "*.py"),
+                              recursive=True)
+        if _store_path_literals(path)
+    )
+    assert where == [os.path.join("llm", "_store.py")]
+
+
+def test_store_path_literal_detector(tmp_path):
+    src = tmp_path / "m.py"
+    src.write_text(
+        '"""Module doc naming <path>/_meta and seg=<id>."""\n'
+        "def f(path, seg):\n"
+        '    """Reads path + "/_codebooks"."""\n'
+        '    a = path + "/_meta"\n'
+        '    return f"{path}/vectors/seg={seg}"\n'
+    )
+    assert _store_path_literals(str(src)) == {"/_meta", "/vectors/seg="}
+    src.write_text('x = "p/_centroids"\n# "/_meta"\ny = "_meta"\n')
+    assert _store_path_literals(str(src)) == {"p/_centroids"}
 
 
 # ---------------------------------------------------------------------------
