@@ -2474,24 +2474,26 @@ def _cross_pairs_ctes(u_cte: str, prefix: str = "") -> str:
         for b in range(_LSH_BANDS)
     )
     return f"""
-    {P}sides AS (SELECT doc_id, side FROM {u_cte}),
+    {P}sides AS MATERIALIZED (SELECT doc_id, side FROM {u_cte}),
     {_shingles_sql(_JACCARD_N, u_cte, P).strip()},
-    {P}sizes AS (SELECT doc_id, COUNT(*) AS sz FROM {P}sh GROUP BY doc_id),
-    {P}sig AS (SELECT doc_id, {mh_cols} FROM {P}sh GROUP BY doc_id),
-    {P}buckets AS ({band_selects}),
-    {P}cand AS (
+    {P}sizes AS MATERIALIZED (
+      SELECT doc_id, COUNT(*) AS sz FROM {P}sh GROUP BY doc_id),
+    {P}sig AS MATERIALIZED (
+      SELECT doc_id, {mh_cols} FROM {P}sh GROUP BY doc_id),
+    {P}buckets AS MATERIALIZED ({band_selects}),
+    {P}cand AS MATERIALIZED (
       SELECT DISTINCT bb.doc_id AS id_a, ib.doc_id AS id_b
       FROM {P}buckets bb
       JOIN {P}sides sb ON sb.doc_id = bb.doc_id AND sb.side = 1
       JOIN {P}buckets ib ON ib.band = bb.band AND ib.key = bb.key
       JOIN {P}sides si ON si.doc_id = ib.doc_id AND si.side = 0),
-    {P}cinter AS (
+    {P}cinter AS MATERIALIZED (
       SELECT c.id_a, c.id_b, COUNT(*) AS inter
       FROM {P}cand c
       JOIN {P}sh a ON a.doc_id = c.id_a
       JOIN {P}sh b ON b.doc_id = c.id_b AND b.sh = a.sh
       GROUP BY 1, 2),
-    {P}ipairs AS (
+    {P}ipairs AS MATERIALIZED (
       SELECT i.id_a, i.id_b, i.inter,
              sa.sz AS size_a, sb.sz AS size_b
       FROM {P}cinter i

@@ -121,6 +121,7 @@ def main() -> int:
         t0 = time.time()
         try:
             sdf = QUERIES[name](spark, args.sf).toPandas()
+            t_spark = time.time() - t0
         except Exception as e:
             print(f"FAIL {name}: spark error: {type(e).__name__}: {e}")
             n_fail += 1
@@ -129,18 +130,20 @@ def main() -> int:
             print(f"ROWS {name}: {len(sdf)} rows (no oracle) [{time.time()-t0:.1f}s]")
             n_rows_only += 1
             continue
+        t1 = time.time()
         try:
             odf = con.execute(ORACLES[name]).fetchdf()
         except Exception as e:
             print(f"FAIL {name}: oracle error: {type(e).__name__}: {e}")
             n_fail += 1
             continue
+        secs = f"[spark {t_spark:.1f}s, duckdb {time.time() - t1:.1f}s]"
         problems = compare(name, sdf, odf)
         if problems:
-            print(f"FAIL {name}: " + "; ".join(problems) + f" [{time.time()-t0:.1f}s]")
+            print(f"FAIL {name}: " + "; ".join(problems) + f" {secs}")
             n_fail += 1
         else:
-            print(f"PASS {name}: {len(sdf)} rows [{time.time()-t0:.1f}s]")
+            print(f"PASS {name}: {len(sdf)} rows {secs}")
             n_pass += 1
     print(f"\n{n_pass} pass, {n_fail} fail, {n_rows_only} rows-only, "
           f"{len(names)} total")

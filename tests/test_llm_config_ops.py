@@ -1,7 +1,9 @@
 """LLM ops as config-pipeline op types + the batched KV sink."""
 
 import json
+import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from configurable_etl_python_repo_spark.plans import (
@@ -233,3 +235,175 @@ def test_multimodal_feature_ops_in_pipeline(spark, tmp_path):
     )).collect()
     assert sorted((r.frame_idx, r.frame_ms, r.mean_luma) for r in frames) \
         == [(0, 0, 42), (1, 80, 42)]
+
+
+def _ops():
+    from configurable_etl_python_repo_spark.operators.llm_ops import (
+        LLM_OP_COMPILERS,
+    )
+
+    return LLM_OP_COMPILERS
+
+
+@pytest.mark.parametrize("op", sorted(_ops()))
+def test_every_op_refuses_a_typo(spark, tmp_path, op):
+    """A typo'd arg dies as a ValueError naming the op and the key
+    before the target runs — for every registered LLM op, not only the
+    index ops. An index build leaves no store behind."""
+    eng = Engine(spark)
+    rel = spark.createDataFrame([(1, "a b c")], "doc_id long, text string")
+    eng.bind("a", rel)
+    eng.bind("b", rel)
+    path = str(tmp_path / "idx")
+    args = {"__typo__": 1, **({"path": path} if "INDEX" in op else {})}
+    with pytest.raises(ValueError, match=rf"{op}\b.*'__typo__'"):
+        eng.run_op(OpSpec(op, "out", ["a", "b"], args))
+    if op == "MINHASH BUILD INDEX":
+        assert not os.path.exists(path)
+
+
+class _Touched(Exception):
+    pass
+
+
+class _Probe:
+    """Stands in for a relation and for the session: any use raises, so
+    reaching a target's body shows the adapter accepted the args."""
+
+    def __getattr__(self, name):
+        raise _Touched(name)
+
+
+class _ProbeEngine:
+    spark = _Probe()
+
+    def peek(self, name):
+        return _Probe(), None
+
+
+def _column_spellings(param: str) -> list[str]:
+    stem, _, col = param.rpartition("_")
+    column = col.replace("col", "column")
+    stems = [stem] + [k for k, v in {"vector": "vec", "output": "out",
+                                     "timestamp": "ts"}.items() if v == stem]
+    return [f"{s}_{column}" if s else column for s in stems]
+
+
+def _rejected(op: str, key: str) -> bool:
+    try:
+        _ops()[op](_ProbeEngine(), OpSpec(op, "t", ["a", "b"], {key: "c"}))
+    except (TypeError, ValueError) as e:
+        # the target's own TypeError names the key; the op's check
+        # lists its renamed form under "unknown args"
+        return repr(key) in str(e) or "unknown args ['" in str(e)
+    except Exception:  # raised inside the target: the key was accepted
+        return False
+    return False
+
+
+@pytest.mark.parametrize("op", sorted(_ops()))
+def test_every_col_param_reachable_from_column_spelling(op):
+    """Spark-free: every `*_col`/`*_cols` parameter of an op's target
+    is reachable from the config spelling `*_column`/`*_columns` (or
+    its long stem: `vector_column` for `vec_col`)."""
+    import inspect
+    import re
+
+    from configurable_etl_python_repo_spark.operators import llm_ops
+
+    fn = llm_ops._target(_ops()[op].target)
+    cols = [p for p in inspect.signature(fn).parameters
+            if re.fullmatch(r"(\w+_)?cols?", p)]
+    for p in cols:
+        spellings = _column_spellings(p)
+        assert not all(_rejected(op, s) for s in spellings), (op, p)
+
+
+def test_column_spelling_detector_sees_a_rejection():
+    """Self-test of the probe: a spelling no target takes is rejected,
+    and a real one is not."""
+    assert _rejected("DEDUP EXACT", "nope_column")
+    assert not _rejected("DEDUP EXACT", "text_column")
+
+
+def _rows(df):
+    return sorted(str(r) for r in df.collect())
+
+
+def test_unexercised_ops_match_direct_calls(spark, sf_dir):
+    """The ops no other test or catalog query runs by name: each op's
+    rows equal the library function's, called directly with the
+    renamed args."""
+    from pyspark.sql import Row
+
+    from configurable_etl_python_repo_spark.llm import clusters as C
+    from configurable_etl_python_repo_spark.llm import dedup as D
+    from configurable_etl_python_repo_spark.llm import multimodal as MM
+    from configurable_etl_python_repo_spark.llm import similarity as S
+    from configurable_etl_python_repo_spark.llm import text as T
+    from configurable_etl_python_repo_spark.sources.files import read_events
+    from configurable_etl_python_repo_spark.streaming import windows as W
+
+    eng = Engine(spark)
+    eng.run_scan(ScanSpec("d", "parquet", f"{sf_dir}/documents.parquet"))
+    docs = eng.peek("d")[0].where(F.col("doc_id") < 40)
+    eng.run_scan(ScanSpec("e", "parquet", f"{sf_dir}/embeddings.parquet"))
+    emb = eng.peek("e")[0].where(F.col("vec_id") < 40)
+    dim = len(emb.first()["embedding"])
+    events = read_events(spark, f"{sf_dir}/events.parquet")
+    pairs = spark.createDataFrame(
+        [(1, 2), (2, 3), (5, 6), (7, 7)], "src long, dst long")
+    media = spark.createDataFrame(
+        [Row(doc_id=i, payload=bytes([i]) * 64) for i in range(3)])
+    ids = {"id_column": "doc_id", "text_column": "text"}
+    vecs = {"id_column": "vec_id", "vector_column": "embedding"}
+    vec_kw = {"id_col": "vec_id", "vec_col": "embedding"}
+    cases = [
+        ("NGRAM JACCARD", docs, {**ids, "n": 2, "threshold": 0.3},
+         lambda: D.ngram_jaccard_pairs(docs, n=2, threshold=0.3)),
+        ("SIMHASH", docs, {"text_column": "text"},
+         lambda: D.simhash32(docs)),
+        ("SIMHASH PAIRS", docs, {**ids, "max_hamming": 6},
+         lambda: D.simhash_pairs(docs, max_hamming=6)),
+        ("LANGUAGE ID NGRAM", docs, ids,
+         lambda: T.language_id_ngram(docs)),
+        ("FINGERPRINT", docs, {"text_column": "text"},
+         lambda: T.fingerprint(docs)),
+        ("TOP NGRAMS", docs, {"n": 2, "k": 7, "text_column": "text"},
+         lambda: T.top_ngrams(docs, n=2, k=7)),
+        ("WINNOW FINGERPRINT", docs, {**ids, "k": 3, "window": 4},
+         lambda: T.winnowing_fingerprints(docs, k=3, window=4)),
+        ("COSINE PAIRS", emb, {**vecs, "threshold": 0.0, "planes": 0},
+         lambda: S.embedding_cosine_pairs(emb, 0.0, planes=0, **vec_kw)),
+        ("CHUNK DOCUMENTS", docs, {**ids, "max_words": 20},
+         lambda: T.chunk_documents(docs, 20)),
+        ("TUMBLING WINDOW", events,
+         {"window": "2 hours", "timestamp_column": "ts"},
+         lambda: W.tumbling_rollup(events, window="2 hours")),
+        ("SLIDING WINDOW", events,
+         {"window": "1 hour", "slide": "30 minutes",
+          "timestamp_column": "ts"},
+         lambda: W.sliding_rollup(events, window="1 hour",
+                                  slide="30 minutes")),
+        ("CONNECTED COMPONENTS", pairs,
+         {"src_column": "src", "dst_column": "dst"},
+         lambda: C.connected_components(pairs, "src", "dst")),
+        ("ANN TOPK IVF", emb, {**vecs, "k": 3, "n_centroids": 4},
+         lambda: S.ivf_topk(emb, emb, k=3, n_centroids=4)),
+        ("ANN TOPK IVF KMEANS", emb, {**vecs, "k": 3, "n_centroids": 4},
+         lambda: S.ivf_topk_kmeans(emb, emb, k=3, n_centroids=4)),
+        ("ANN TOPK IVF PQ RESIDUAL", emb,
+         {**vecs, "k": 3, "dim": dim, "n_centroids": 4},
+         lambda: S.ivf_pq_residual_topk(emb, emb, k=3, dim=dim,
+                                        n_centroids=4)),
+        ("IMAGE RESIZE", media, {"id_column": "doc_id", "max_side": 64},
+         lambda: MM.resize_images(media, max_side=64)),
+        ("FRAME SAMPLE", media,
+         {"payload_column": "payload", "every_ms": 500, "max_frames": 4},
+         lambda: MM.sample_frames(media, every_ms=500, max_frames=4)),
+    ]
+    for op, rel, args, direct in cases:
+        eng.bind("in", rel)
+        got = _rows(eng.run_op(OpSpec(op, "out", ["in"], args)))
+        assert got == _rows(direct()), op
+        assert got, op  # a non-empty comparison
